@@ -251,7 +251,9 @@ object Main {
       opts.get("out").foreach { out =>
         try {
           auditIfRequested(input, keyCol, out)
-          Checkpoint.resume(spark, input, keyCol, transform, out, buckets)
+          // concurrent units: no idle cores between one unit's job and the next
+          Checkpoint.resume(spark, input, keyCol, transform, out, buckets,
+            unitParallelism = spark.sparkContext.defaultParallelism)
         } catch {
           case e: Checkpoint.KeyingMismatch =>
             throw new CliArgError(

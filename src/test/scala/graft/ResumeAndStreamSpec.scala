@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 
 class ResumeSpec extends AnyFunSuite {
 
@@ -281,6 +282,110 @@ class ResumeSpec extends AnyFunSuite {
         outNull, buckets = 8, inputPrePartitioned = true)
     }
     assert(en2.getMessage.contains("NULL part_bucket"))
+  }
+
+  test("failed parallel resume leaves no unit committing in the background") {
+    val out = Files.createTempDirectory("ckpt_parfail").toString
+    val e = intercept[RuntimeException] {
+      Checkpoint.resume(spark, input, "doc_id", transform, out, buckets = 8,
+        failAtUnit = Some(5), unitParallelism = 4)
+    }
+    assert(e.getMessage.contains("failpoint"))
+    val atThrow = Checkpoint.committedUnits(out)
+    assert(!atThrow.contains(5))
+    Thread.sleep(2000) // a sibling still running would seal in this window
+    assert(Checkpoint.committedUnits(out) == atThrow,
+      "units committed after resume() had thrown")
+    val r = Checkpoint.resume(spark, input, "doc_id", transform, out, buckets = 8)
+    assert(r.unitsSkipped == atThrow.toSeq.sorted)
+    assert(r.unitsCommitted == (0 until 8).filterNot(atThrow))
+    val fresh = Files.createTempDirectory("ckpt_parfail_ref").toString
+    Checkpoint.resume(spark, input, "doc_id", transform, fresh, buckets = 8)
+    val a = Checkpoint.readCommitted(spark, out)
+      .select("doc_id", "n").collect().map(_.toString).sorted.toSeq
+    val b = Checkpoint.readCommitted(spark, fresh)
+      .select("doc_id", "n").collect().map(_.toString).sorted.toSeq
+    assert(a == b && a.size == 1000)
+  }
+
+  test("manifest JSON round-trips a key column named with quote and backslash") {
+    val key = "we\"ird\\key"
+    val keyed = input.withColumnRenamed("doc_id", key)
+    val t: DataFrame => DataFrame =
+      df => df.select(col(key), length(col("text")).as("n"))
+    val out = Files.createTempDirectory("ckpt_json").toString
+    Checkpoint.resume(spark, keyed, key, t, out, buckets = 4)
+    val ms = Checkpoint.readManifests(out)
+    assert(ms.map(_.bucket) == Seq(0, 1, 2, 3))
+    assert(ms.forall(m => m.keyCol == key && m.status == "committed"))
+    assert(ms.map(_.nOutput).sum == 1000L)
+    // later calls read the manifests back: resume is a no-op, audit clean
+    val r = Checkpoint.resume(spark, keyed, key, t, out, buckets = 4)
+    assert(r.unitsCommitted.isEmpty && r.unitsSkipped == Seq(0, 1, 2, 3))
+    assert(Checkpoint.validateCommitted(spark, keyed, key, out, 4).isEmpty)
+  }
+
+  test("staging and committed units hold one data file per bucket (32 input partitions)") {
+    // staged per (input partition x bucket), 32 partitions would stage up
+    // to 32 small files per bucket; the rebalanced staging writes one
+    val out = Files.createTempDirectory("ckpt_files").toString
+    intercept[RuntimeException] {
+      Checkpoint.resume(spark, input.repartition(32), "doc_id", transform, out,
+        buckets = 4, failAtUnit = Some(2)) // commits 0-1, leaves _staged
+    }
+    def dataFiles(dir: String, k: Int): Int = {
+      val ls = Files.list(java.nio.file.Paths.get(out, dir, s"part_bucket=$k"))
+      try ls.iterator().asScala.map(_.getFileName.toString)
+        .count(n => n.startsWith("part-") && n.endsWith(".parquet"))
+      finally ls.close()
+    }
+    for (k <- 0 until 4)
+      assert(dataFiles("_staged", k) == 1, s"_staged/part_bucket=$k")
+    for (k <- Checkpoint.committedUnits(out))
+      assert(dataFiles("data", k) == 1, s"data/part_bucket=$k")
+    assert(Checkpoint.committedUnits(out) == Set(0, 1))
+  }
+
+  test("observed n_output equals a read-back count; lineage equals the audit's") {
+    val half: DataFrame => DataFrame = df =>
+      transform(df).filter(substring(col("doc_id"), -1, 1).cast("int") % 2 === 0)
+    val cases = Seq[(String, DataFrame => DataFrame, Long)](
+      ("identity", transform, 1000L), ("filter-half", half, 500L),
+      ("all-empty", df => df.filter(lit(false)), 0L))
+    for ((name, t, total) <- cases) {
+      val out = Files.createTempDirectory(s"ckpt_obs_$name").toString
+      Checkpoint.resume(spark, input, "doc_id", t, out, buckets = 4)
+      val ms = Checkpoint.readManifests(out)
+      val schema = t(input).schema
+      for (m <- ms) {
+        val readBack = spark.read.schema(schema)
+          .parquet(s"$out/data/part_bucket=${m.bucket}").count()
+        assert(m.nOutput == readBack, s"$name unit ${m.bucket}: ${m.nOutput} != $readBack")
+      }
+      assert(ms.map(_.nOutput).sum == total, name)
+      // lineage: what the audit recomputes from the input, unit by unit
+      assert(Checkpoint.validateCommitted(spark, input, "doc_id", out, 4).isEmpty, name)
+      val recomputed = input
+        .groupBy(Checkpoint.bucketOf("doc_id", 4))
+        .agg(count(lit(1)), coalesce(bit_xor(xxhash64(col("doc_id"))), lit(0L)))
+        .collect().map(r => r.getInt(0) -> ((r.getLong(1), r.getLong(2)))).toMap
+      assert(ms.map(m => m.bucket -> ((m.nInput, m.inputFingerprint))).toMap == recomputed, name)
+    }
+  }
+
+  test("concurrent units run under the caller's job group") {
+    val group = "resume-caller-group"
+    val groupOf = udf(() =>
+      org.apache.spark.TaskContext.get.getLocalProperty("spark.jobGroup.id")).asNondeterministic()
+    val out = Files.createTempDirectory("ckpt_group").toString
+    spark.sparkContext.setJobGroup(group, "concurrent units")
+    try Checkpoint.resume(spark, input, "doc_id",
+      df => df.select(col("doc_id"), groupOf().as("grp")), out,
+      buckets = 8, unitParallelism = 4)
+    finally spark.sparkContext.clearJobGroup()
+    val groups = Checkpoint.readCommitted(spark, out)
+      .groupBy("grp").count().collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(groups == Map(group -> 1000L), s"unit rows by job group: $groups")
   }
 
   test("manifest lineage: fingerprints and counts recorded per unit") {
