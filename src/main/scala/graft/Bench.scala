@@ -143,7 +143,7 @@ object Bench {
     spark.sparkContext.addSparkListener(listener)
     try {
       Extract.run(spark.read.parquet(dir).as[Doc]).count()
-      Thread.sleep(300) // let the listener bus drain (no public wait API)
+      org.apache.spark.GraftListenerBus.drain(spark.sparkContext) // every task-end seen
     } finally spark.sparkContext.removeSparkListener(listener)
     val ds = durations.toArray(Array.empty[java.lang.Long]).map(_.toLong)
     if (ds.isEmpty) (0.0, 0)
@@ -340,31 +340,27 @@ object ScalingBench {
     * caller so the per-JVM parse isn't charged to one level).
     */
   def timePipeline(spark: SparkSession, dir: String): Double = {
-    // session-memoized: re-broadcasting the 50.7k-term postings per
-    // pipeline job was measurable fixed cost at small corpora (VERDICT
-    // r3 item 6) — a production job classifies many slices per session
-    val bc = graft.gloss.Classify.dictsBroadcast(spark)
+    import spark.implicits._
     val t0 = System.nanoTime()
-    // classify-only byte-path extraction — the user-facing default
-    // (VERDICT r3 item 2; ExtractTitleExpr skips span materialization).
-    // Three serialized jobs total (VERDICT r4 item 1): (1) extract+IDF,
-    // (2) classify fused into the threads aggregation — the thread agg's
-    // shuffle map side materializes the classified cache, so there is no
-    // separate count() pass or job boundary between them — (3) top over
-    // the PERSISTED thread table (threads feed both the thread listing
-    // and top in one session; recomputing the salted agg per consumer
-    // was pure recompute waste).
-    var th: org.apache.spark.sql.DataFrame = null
-    val classified = graft.gloss.Classify.runCachedSlimFused(
-      graft.extract.ExtractTitleExpr.run(spark.read.parquet(dir)), bc) { cls =>
-      th = graft.threads.Threads.threads(cls)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      th.count() // one job: classify → salted thread agg → thread cache
-    }
+    // the CLI's steady state: classify-only byte-path extraction
+    // (ExtractTitleExpr skips span materialization), persisted once,
+    // then IDF and a lazily persisted classify. Three serialized jobs
+    // total (VERDICT r4 item 1): (1) extract+IDF, (2) classify fused into
+    // the threads aggregation — the thread agg's shuffle map side
+    // materializes the classified cache, so there is no separate count()
+    // pass or job boundary between them — (3) top over the PERSISTED
+    // thread table (threads feed both the thread listing and top in one
+    // session; recomputing the salted agg per consumer was pure
+    // recompute waste).
+    val (classified, release, _) =
+      cli.Main.classifySteadyState(spark, spark.read.parquet(dir).as[Doc], Map.empty)
+    val th = graft.threads.Threads.threads(classified)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    th.count() // one job: classify → salted thread agg → thread cache
     graft.threads.Threads.top(th).count() // tiny: window over cached threads
     val sec = (System.nanoTime() - t0) / 1e9
     th.unpersist()
-    classified.unpersist()
+    release()
     sec
   }
 
@@ -450,9 +446,10 @@ object FuzzyProfile {
     val spark = Bench.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     spark.sparkContext.setLogLevel("WARN")
     val pq = Bench.corpusParquet(spark, nDocs, 128)
-    val bc = graft.gloss.Classify.dictsBroadcast(spark)
-    val classified = graft.gloss.Classify.runCachedSlim(
-      graft.extract.ExtractTitleExpr.run(spark.read.parquet(pq)), bc)
+    import spark.implicits._
+    val (classified, release, _) =
+      cli.Main.classifySteadyState(spark, spark.read.parquet(pq).as[Doc], Map.empty)
+    classified.count() // classify outside the ticks below
     def tick(label: String)(f: => Long): Unit = {
       val t0 = System.nanoTime(); val n = f
       println(f"$label: ${(System.nanoTime() - t0) / 1e9}%.2f s (n=$n)")
@@ -476,7 +473,7 @@ object FuzzyProfile {
     tick("3 + connected components ")(graft.ops.Dedup.connectedComponentsAuto(verified).count())
     tick("full again (titles warm) ")(graft.threads.Threads.threadsFuzzy(classified).count())
     titles.unpersist()
-    classified.unpersist()
+    release()
     spark.stop()
   }
 }
@@ -542,27 +539,6 @@ object QueryProfile {
       }
       println(f"repeat $r tell=${tell.round} ${ts.mkString("  ")}")
     }
-    spark.stop()
-  }
-}
-
-/** Minimal host-quietness probe: one extraction tell over the
-  * materialized corpus for (SPARK_GRAFT_CPUS, nDocs) — the cheap
-  * front-end of the quiet-window hunt (r7 ran 32 manual probes; this
-  * makes the loop scriptable). Prints one JSON line.
-  *
-  * {{{ SPARK_GRAFT_CPUS=16 sbt "runMain graft.TellProbe 8000000" }}}
-  */
-object TellProbe {
-  def main(args: Array[String]): Unit = {
-    val nDocs = if (args.nonEmpty) args(0).toLong else 8000000L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = Bench.session(cpus)
-    spark.sparkContext.setLogLevel("WARN")
-    val pq = Bench.corpusParquet(spark, nDocs, 128)
-    Bench.timeExtractParquetExpr(spark, pq) // warmup (codegen + page cache)
-    val tell = (1 to 2).map(_ => nDocs / Bench.timeExtractParquetExpr(spark, pq)._2).max
-    println(s"""{"tell_probe":${tell.round},"cpus":$cpus,"docs":$nDocs}""")
     spark.stop()
   }
 }

@@ -32,13 +32,12 @@ object BenchExtra {
     var elapsed = 0.0
     try {
       df.write.format("noop").mode("overwrite").save()
-      // capture BEFORE the listener drain: the 300 ms sleep is harness
-      // bookkeeping, not query time (review r9 — it inflated every
-      // published A/B number by a constant ~0.3 s)
+      // capture BEFORE the listener drain: the drain is harness
+      // bookkeeping, not query time
       elapsed = (System.nanoTime() - t0) / 1e9
     } finally {
       spark.sparkContext.setJobDescription(null)
-      Thread.sleep(300) // listener bus drain
+      org.apache.spark.GraftListenerBus.drain(spark.sparkContext)
       spark.sparkContext.removeSparkListener(listener)
     }
     (elapsed, bytes.get())

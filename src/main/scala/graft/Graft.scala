@@ -8,7 +8,8 @@ import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 
 /** Library facade — the five reference verbs as typed Dataset transforms
-  * (the CLI and SparkEntry are thin wrappers over these). A reference
+  * over the same extraction and classify paths the CLI and SparkEntry
+  * run (one IDF pass, one expression classify). A reference
   * user's `tgnews <verb> <dir>` maps to:
   *
   * {{{
@@ -27,15 +28,16 @@ final class Graft(val spark: SparkSession) {
   /** HTML → ordered spans + language gate (verbs build on this). */
   def extract(docs: Dataset[Doc]): Dataset[ExtractedDoc] = Extract.run(docs)
 
-  def classify(docs: Dataset[Doc]): Dataset[ClassifiedDoc] =
-    Classify.run(extract(docs), dicts)
-
-  /** Steady-state classify — ONE corpus scan, result persisted (caller
-    * unpersists when done). Use this when several verbs/actions consume
-    * the same corpus: [[classify]] is lazy and re-extracts per action.
+  /** Corpus IDF (one eager pass) + the expression classify path. The
+    * result is lazy: every action re-extracts. When several actions
+    * consume one corpus, persist the extraction first — the CLI's steady
+    * state (`cli.Main.classifySteadyState`) does exactly that.
     */
-  def classifyCached(docs: Dataset[Doc]): Dataset[ClassifiedDoc] =
-    Classify.runCached(extract(docs), dicts)
+  def classify(docs: Dataset[Doc]): Dataset[ClassifiedDoc] = {
+    val extracted = extract(docs).toDF()
+    Classify.runWithIdfSlim(extracted, dicts,
+      spark.sparkContext.broadcast(Classify.computeIdf(extracted, dicts.value)))
+  }
 
   /** languages: (lang, doc_id) for the en/ru whitelist. */
   def languages(docs: Dataset[Doc]): DataFrame = {

@@ -133,9 +133,9 @@ object SparkEntry {
   def classifiedFor(spark: SparkSession, dir: String): org.apache.spark.sql.Dataset[graft.model.ClassifiedDoc] =
     classifiedCache.getOrBuild((spark, dir)) {
       val bc = Classify.dictsBroadcast(spark)
-      val ext = extractedCachedFor(spark, dir)
+      val ext = extractedCachedFor(spark, dir).toDF()
       val bcIdf = spark.sparkContext.broadcast(Classify.computeIdf(ext, bc.value))
-      val cls = Classify.runWithIdf(ext, bc, bcIdf)
+      val cls = Classify.runWithIdfSlim(ext, bc, bcIdf)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       cls.count() // materialize now: downstream actions hit the cache
       cls         // ext stays persisted — shared with the span queries

@@ -159,8 +159,13 @@ object Main {
     * serialized job boundary. The extraction cache therefore stays
     * persisted (it backs any not-yet-computed classified partitions)
     * until `release`, which frees both.
+    *
+    * This is the ONE persisted classify shape: the verbs, the dev benches
+    * (ScalingBench, BenchLarge, FuzzyProfile) and PipelineSpec's one-scan
+    * test all call it; the benches and the test pass empty `opts` (no
+    * `--out`, so no `_idf` sidecar).
     */
-  private def classifySteadyState(spark: SparkSession, docs: Dataset[Doc],
+  private[graft] def classifySteadyState(spark: SparkSession, docs: Dataset[Doc],
       opts: Map[String, String]): (Dataset[graft.model.ClassifiedDoc], () => Unit, () => Unit) = {
     import org.apache.spark.storage.StorageLevel
     import spark.implicits._
@@ -207,8 +212,7 @@ object Main {
             ()
           })
         }
-      case None =>
-        (Classify.idfFromTable(Classify.dfTableSlim(extracted, bc.value)), () => ())
+      case None => (Classify.computeIdf(extracted, bc.value), () => ())
     }
     val bcIdf = spark.sparkContext.broadcast(idf)
     val classified = Classify.runWithIdfSlim(extracted, bc, bcIdf)

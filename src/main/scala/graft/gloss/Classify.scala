@@ -1,7 +1,7 @@
 package graft.gloss
 
 import graft.extract.TitleKey
-import graft.model.{ClassifiedDoc, ExtractedDoc}
+import graft.model.ClassifiedDoc
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.Dataset
 
@@ -42,7 +42,8 @@ object CategoryRules {
   }
 }
 
-/** Glossary/entity enrichment + categorization stage.
+/** Glossary/entity enrichment + categorization stage: one IDF pass, one
+  * classify path and its executable spec.
   *
   * Two stages, both bounded (SURVEY.md §1.3, C2/C3/C4):
   *  1. [[computeIdf]] — document frequency of DICTIONARY-VOCABULARY
@@ -50,9 +51,16 @@ object CategoryRules {
   *     space is capped by the ~40k-token dictionary vocabulary, then a
   *     ≤40k-row collect → broadcast). This reproduces the corpus-IDF
   *     gate the reference gets from tantivy BM25 — without it the real
-  *     37.7k-word bert-dict over-fires on stopwords.
-  *  2. One mapPartitions with two broadcast matchers (themes + entity
-  *     classes) + the broadcast IDF table. No other shuffle.
+  *     37.7k-word bert-dict over-fires on stopwords. [[dfTableSlim]] is
+  *     the persistable table behind it, [[idfFromTable]] reads it back.
+  *  2. [[runWithIdfSlim]] — one Catalyst expression per row
+  *     ([[ClassifyTitleExpr]]) with two broadcast matchers (themes +
+  *     entity classes) + the broadcast IDF table. No other shuffle.
+  *     [[runWithIdfSlimTyped]] is its typed row-object twin, kept as
+  *     the executable spec.
+  *
+  * Persisting the extraction so IDF and classify share one corpus scan is
+  * the caller's job: `cli.Main.classifySteadyState` is the one persisted shape.
   */
 object Classify {
 
@@ -84,36 +92,20 @@ object Classify {
 
   /** (token, df) document-frequency table restricted to dictionary
     * tokens, with corpus size N carried on the [[DocSentinel]] row —
-    * ≤ |dictionary vocabulary|+1 rows. PERSISTABLE: write it once per
-    * corpus snapshot (parquet/Iceberg) and feed every later classify job
+    * ≤ |dictionary vocabulary|+1 rows. Reads only the `title_norm`
+    * column of `df` (any extraction output qualifies). PERSISTABLE:
+    * write it once per corpus snapshot and feed every later classify job
     * via [[idfFromTable]] — that amortizes the DF scan, so steady-state
     * classification is back to ONE pass over the corpus.
     */
-  def dfTable(extracted: Dataset[ExtractedDoc], dicts: Dicts): org.apache.spark.sql.DataFrame =
-    dfTableSlim(slim(extracted), dicts)
-
-  /** Classification is a TITLE-level operation: the only columns it ever
-    * reads are (doc_id, lang, title_norm). This projection keeps span
-    * payloads — the bulk of an ExtractedDoc — out of the classify
-    * caches and out of the IDF/classify deserialization loops (r4: cut
-    * 2M-doc classify_once ~9.9→7.x s). Reading 3 columns from a cached
-    * full ExtractedDoc relation prunes columns at the InMemoryRelation,
-    * so sharing the full extraction cache stays cheap too.
-    */
-  private def slim(extracted: Dataset[ExtractedDoc]): org.apache.spark.sql.DataFrame =
-    extracted.toDF().select(org.apache.spark.sql.functions.col("doc_id"),
-      org.apache.spark.sql.functions.col("lang"),
-      org.apache.spark.sql.functions.col("title_norm"))
-
-  /** [[dfTable]] over the slim (doc_id, lang, title_norm) projection. */
-  def dfTableSlim(slimDf: org.apache.spark.sql.DataFrame, dicts: Dicts): org.apache.spark.sql.DataFrame = {
-    val spark = slimDf.sparkSession
+  def dfTableSlim(df: org.apache.spark.sql.DataFrame, dicts: Dicts): org.apache.spark.sql.DataFrame = {
+    val spark = df.sparkSession
     import spark.implicits._
     val vocab = new java.util.HashSet[String]()
     dicts.themes.vocabulary.foreach(vocab.add)
     dicts.entities.vocabulary.foreach(vocab.add)
     val bcV = spark.sparkContext.broadcast(vocab)
-    slimDf.select($"title_norm").as[String]
+    df.select($"title_norm").as[String]
       .mapPartitions { it =>
         val v = bcV.value
         it.flatMap { title =>
@@ -125,7 +117,7 @@ object Classify {
       .toDF("token", "df")
   }
 
-  /** Materialize a (token, df) table — from [[dfTable]] directly or read
+  /** Materialize a (token, df) table — from [[dfTableSlim]] directly or read
     * back from storage — into the broadcastable [[TokenIdf]].
     */
   def idfFromTable(table: org.apache.spark.sql.DataFrame): TokenIdf = {
@@ -144,11 +136,8 @@ object Classify {
   }
 
   /** Corpus document frequency restricted to dictionary tokens. */
-  def computeIdf(extracted: Dataset[ExtractedDoc], dicts: Dicts): TokenIdf =
-    idfFromTable(dfTable(extracted, dicts))
-
-  def classifyOne(doc: ExtractedDoc, dicts: Dicts, idf: TokenIdf): ClassifiedDoc =
-    classifyRow(doc.doc_id, doc.lang, doc.title_norm, dicts, idf)
+  def computeIdf(df: org.apache.spark.sql.DataFrame, dicts: Dicts): TokenIdf =
+    idfFromTable(dfTableSlim(df, dicts))
 
   /** The classification KERNEL shared by the typed row path and the
     * Catalyst expression ([[ClassifyTitleExpr]]): title_norm →
@@ -190,78 +179,12 @@ object Classify {
     )
   }
 
-  def run(extracted: Dataset[ExtractedDoc], bc: Broadcast[Dicts]): Dataset[ClassifiedDoc] = {
-    val bcIdf = extracted.sparkSession.sparkContext
-      .broadcast(computeIdf(extracted, bc.value))
-    runWithIdf(extracted, bc, bcIdf)
-  }
-
-  /** Steady-state classify (the default path a user hits — VERDICT r2
-    * item 1): persist `extracted`, derive the corpus IDF from the
-    * persisted copy, classify from it, persist + materialize the result.
-    * The UNDERLYING corpus is scanned exactly once no matter how many
-    * downstream actions consume the returned Dataset (the one-scan
-    * property PipelineSpec asserts with an input-side accumulator) —
-    * [[run]]'s lazy result re-extracts + re-classifies per action, which
-    * at 10^12 rows multiplies the most expensive stage 2-3×.
-    * Caller unpersists when done.
-    */
-  def runCached(extracted: Dataset[ExtractedDoc], bc: Broadcast[Dicts]): Dataset[ClassifiedDoc] =
-    runCachedSlim(slim(extracted), bc)
-
-  /** [[runCached]] over a slim (doc_id, lang, title_norm) input — e.g.
-    * `ExtractTitleExpr.run` output, the classify-only extraction that
-    * never materializes spans at all.
-    */
-  def runCachedSlim(slimDf: org.apache.spark.sql.DataFrame, bc: Broadcast[Dicts]): Dataset[ClassifiedDoc] =
-    runCachedSlimFused(slimDf, bc)(_.count())
-
-  /** [[runCachedSlim]] with the materializing action FUSED into the first
-    * consumer (VERDICT r4 item 1): `materialize` receives the persisted
-    * classified Dataset and must run at least one action that touches
-    * every partition (a downstream aggregation qualifies — computing a
-    * persisted Dataset's partitions as part of a consuming job populates
-    * the cache). Versus `runCachedSlim` + a separate consumer job this
-    * saves one full pass over the classified cache AND one serialized
-    * job boundary: classify map work pipelines straight into the
-    * consumer's shuffle map side. The slim input cache is freed only
-    * after `materialize` returns, so the corpus is still scanned exactly
-    * once regardless.
-    */
-  def runCachedSlimFused(slimDf: org.apache.spark.sql.DataFrame, bc: Broadcast[Dicts])(
-      materialize: Dataset[ClassifiedDoc] => Unit): Dataset[ClassifiedDoc] = {
-    import org.apache.spark.storage.StorageLevel
-    // persist the SLIM projection, not the full ExtractedDoc: spans are
-    // never read by classification, and at 2M docs they are ~90% of the
-    // cache bytes and of the per-pass deserialization work
-    val slimCached = slimDf.persist(StorageLevel.MEMORY_AND_DISK)
-    val bcIdf = slimDf.sparkSession.sparkContext
-      .broadcast(idfFromTable(dfTableSlim(slimCached, bc.value))) // materializes the cache
-    val out = runWithIdfSlim(slimCached, bc, bcIdf).persist(StorageLevel.MEMORY_AND_DISK)
-    // populate the classified cache from the slim cache; a partial
-    // materializer (take/show) is a CONTRACT VIOLATION — the slim cache
-    // is freed below, so unmaterialized classified partitions would
-    // silently re-extract from the raw source per later action
-    // (PipelineSpec pins the intended full-scan shape with an
-    // accumulator). The finally keeps an exception from materialize
-    // leaking the slim cache into a long-lived session's block manager.
-    try materialize(out)
-    catch { case e: Throwable => out.unpersist(); throw e }
-    finally slimCached.unpersist()
-    out
-  }
-
-  /** Classify with a PRE-COMPUTED idf (e.g. [[idfFromTable]] over a
-    * persisted [[dfTable]]) — one mapPartitions over the slim columns,
-    * one corpus scan (pruned to 3 columns when `extracted` is cached).
-    */
-  def runWithIdf(extracted: Dataset[ExtractedDoc], bc: Broadcast[Dicts],
-                 bcIdf: Broadcast[TokenIdf]): Dataset[ClassifiedDoc] =
-    runWithIdfSlim(slim(extracted), bc, bcIdf)
-
-  /** [[runWithIdf]] over the slim (doc_id, lang, title_norm) projection.
-    * Columns bind BY NAME (a reordered but valid slim frame must not be
-    * silently misclassified through positional tuple binding).
+  /** Classify with a PRE-COMPUTED idf ([[computeIdf]], or [[idfFromTable]]
+    * over a persisted [[dfTableSlim]]) — the one production classify
+    * path. Reads the (doc_id, lang, title_norm) columns of `df` BY NAME:
+    * a reordered frame, or a full extraction with span columns, needs no
+    * projection by the caller and is never misclassified through
+    * positional tuple binding.
     *
     * Runs [[ClassifyTitleExpr]] — classification stays in Tungsten
     * format end-to-end: doc_id/lang pass through as untouched columns,
@@ -274,19 +197,19 @@ object Classify {
     * [[runWithIdfSlimTyped]] keeps the row-object form as the executable
     * spec (ClassifyExprSpec asserts equality).
     */
-  def runWithIdfSlim(slimDf: org.apache.spark.sql.DataFrame, bc: Broadcast[Dicts],
+  def runWithIdfSlim(df: org.apache.spark.sql.DataFrame, bc: Broadcast[Dicts],
                      bcIdf: Broadcast[TokenIdf]): Dataset[ClassifiedDoc] = {
     import org.apache.spark.sql.functions.col
-    val spark = slimDf.sparkSession
+    val spark = df.sparkSession
     import spark.implicits._
     // NULL titles are dropped, not classified (ADVICE r6): the expression
     // is nullable (UnaryExpression: null child → null struct) while
     // OutType declares non-null fields — a caller passing a frame with
     // nullable title_norm would otherwise flow null category/is_news
-    // through fields the optimizer treats as non-null. Every current
-    // caller (ExtractTitleExpr.run, slim()) already filters nulls, so
-    // this is a no-op row-wise; the typed twin filters identically.
-    slimDf.filter(col("title_norm").isNotNull)
+    // through fields the optimizer treats as non-null. Extraction
+    // output never carries a null title, so this is a no-op row-wise on
+    // every current caller; the typed twin filters identically.
+    df.filter(col("title_norm").isNotNull)
       .select(col("doc_id"), col("lang"), col("title_norm"),
         ClassifyTitleExpr.classify_title(col("title_norm"), bc, bcIdf).as("_c"))
       // CollapseProject leaves the non-cheap multi-referenced `_c` in its
@@ -302,11 +225,11 @@ object Classify {
   /** The typed row-object twin of [[runWithIdfSlim]] — the executable
     * spec of the classification map (same [[classifyCore]] kernel).
     */
-  def runWithIdfSlimTyped(slimDf: org.apache.spark.sql.DataFrame, bc: Broadcast[Dicts],
+  def runWithIdfSlimTyped(df: org.apache.spark.sql.DataFrame, bc: Broadcast[Dicts],
                           bcIdf: Broadcast[TokenIdf]): Dataset[ClassifiedDoc] = {
-    val spark = slimDf.sparkSession
+    val spark = df.sparkSession
     import spark.implicits._
-    slimDf.filter(org.apache.spark.sql.functions.col("title_norm").isNotNull)
+    df.filter(org.apache.spark.sql.functions.col("title_norm").isNotNull)
       .select("doc_id", "lang", "title_norm")
       .as[(String, String, String)].mapPartitions { it =>
         val dicts = bc.value

@@ -10,7 +10,9 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** Tungsten-native classification: the whole dictionary/IDF kernel as ONE
   * Catalyst expression over `title_norm` (VERDICT r5 item 3 — the last
-  * encoder boundary on the steady-state pipeline's hot path).
+  * encoder boundary on the steady-state pipeline's hot path). It is the
+  * body of [[Classify.runWithIdfSlim]], the one production classify path
+  * every caller (CLI, facade, SparkEntry, streaming) goes through.
   *
   * Why an expression and not the typed mapPartitions
   * ([[Classify.runWithIdfSlimTyped]], kept as the executable spec): the

@@ -26,8 +26,7 @@ class ClassifyExprSpec extends AnyFunSuite {
       graft.synth.Synth.corpus(spark, 42L, 8000L).toDF())
       .persist()
     val bc = Classify.dictsBroadcast(spark)
-    val bcIdf = spark.sparkContext.broadcast(
-      Classify.idfFromTable(Classify.dfTableSlim(slim, bc.value)))
+    val bcIdf = spark.sparkContext.broadcast(Classify.computeIdf(slim, bc.value))
     val expr = norm(Classify.runWithIdfSlim(slim, bc, bcIdf))
     val typed = norm(Classify.runWithIdfSlimTyped(slim, bc, bcIdf))
     assert(expr == typed)
@@ -50,8 +49,7 @@ class ClassifyExprSpec extends AnyFunSuite {
       ("d3", "ru", "правительство россии обсуждает бюджет"))
       .toDF("doc_id", "lang", "title_norm").repartition(2)
     val bc = Classify.dictsBroadcast(spark)
-    val bcIdf = spark.sparkContext.broadcast(
-      Classify.idfFromTable(Classify.dfTableSlim(slim, bc.value)))
+    val bcIdf = spark.sparkContext.broadcast(Classify.computeIdf(slim, bc.value))
     val out = Classify.runWithIdfSlim(slim, bc, bcIdf).toDF()
     def exprCount(df: org.apache.spark.sql.DataFrame): (Int, Int) = {
       val opt = df.queryExecution.optimizedPlan.toString
@@ -91,7 +89,7 @@ class ClassifyExprSpec extends AnyFunSuite {
       .toDF("doc_id", "lang", "title_norm").repartition(2)
     val bc = Classify.dictsBroadcast(spark)
     val bcIdf = spark.sparkContext.broadcast(
-      Classify.idfFromTable(Classify.dfTableSlim(slim.filter($"title_norm".isNotNull), bc.value)))
+      Classify.computeIdf(slim.filter($"title_norm".isNotNull), bc.value))
     val expr = Classify.runWithIdfSlim(slim, bc, bcIdf)
     val typed = Classify.runWithIdfSlimTyped(slim, bc, bcIdf)
     assert(expr.collect().map(_.doc_id).sorted.toSeq == Seq("d1", "d3"))

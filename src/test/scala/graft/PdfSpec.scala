@@ -495,8 +495,10 @@ class PdfSpec extends AnyFunSuite {
   test("PDF docs flow into classification and threads like HTML docs") {
     import spark.implicits._
     val extracted = PdfExtract.run(PdfSynth.corpus(spark, 42L, 300L))
-    val bc = spark.sparkContext.broadcast(graft.gloss.Classify.defaultDicts)
-    val classified = graft.gloss.Classify.run(extracted, bc)
+    val bc = graft.gloss.Classify.dictsBroadcast(spark)
+    val df = extracted.toDF()
+    val classified = graft.gloss.Classify.runWithIdfSlim(df, bc,
+      spark.sparkContext.broadcast(graft.gloss.Classify.computeIdf(df, bc.value)))
     assert(classified.count() == extracted.count())
     // duplicate titles exist in the word-pool space → some threads form
     val th = graft.threads.Threads.threads(classified).count()

@@ -43,26 +43,25 @@ class PipelineSpec extends AnyFunSuite {
 
   test("persisted df-table round trip classifies identically (idf amortization)") {
     import spark.implicits._
-    val bc = spark.sparkContext.broadcast(Classify.defaultDicts)
-    val extracted = Extract.run(Synth.corpus(spark, seed, n))
+    val bc = Classify.dictsBroadcast(spark)
+    val extracted = Extract.run(Synth.corpus(spark, seed, n)).toDF()
     val dir = java.nio.file.Files.createTempDirectory("dftable").toString
-    Classify.dfTable(extracted, bc.value).write.mode("overwrite").parquet(dir)
-    val bcIdf = spark.sparkContext.broadcast(
-      Classify.idfFromTable(spark.read.parquet(dir)))
-    val viaTable = Classify.runWithIdf(extracted, bc, bcIdf)
+    Classify.dfTableSlim(extracted, bc.value).write.mode("overwrite").parquet(dir)
+    def key(ds: org.apache.spark.sql.Dataset[graft.model.ClassifiedDoc]) = ds
       .map(c => (c.doc_id, c.category, c.is_news, c.entities.keys.toSeq.sorted.mkString(",")))
       .collect().sortBy(_._1).toSeq
-    val direct = Classify.run(extracted, bc)
-      .map(c => (c.doc_id, c.category, c.is_news, c.entities.keys.toSeq.sorted.mkString(",")))
-      .collect().sortBy(_._1).toSeq
+    val viaTable = key(Classify.runWithIdfSlim(extracted, bc,
+      spark.sparkContext.broadcast(Classify.idfFromTable(spark.read.parquet(dir)))))
+    val direct = key(Classify.runWithIdfSlim(extracted, bc,
+      spark.sparkContext.broadcast(Classify.computeIdf(extracted, bc.value))))
     assert(viaTable == direct)
+    assert(key(Graft(spark).classify(Synth.corpus(spark, seed, n))) == direct)
     assert(direct.nonEmpty)
   }
 
   test("threads: clusters match ground-truth title groups, size >= 2") {
     import spark.implicits._
-    val bc = spark.sparkContext.broadcast(Classify.loadDicts())
-    val classified = Classify.run(Extract.run(Synth.corpus(spark, seed, n)), bc)
+    val classified = Graft(spark).classify(Synth.corpus(spark, seed, n))
     val got = Threads.threads(classified)
       .select($"title_norm", $"size")
       .as[(String, Long)].collect().toMap
@@ -74,10 +73,8 @@ class PipelineSpec extends AnyFunSuite {
 
   test("threads clustering is partition-count invariant") {
     import spark.implicits._
-    val bc = spark.sparkContext.broadcast(Classify.loadDicts())
     def run(parts: Int) = {
-      val classified = Classify.run(
-        Extract.run(Synth.corpus(spark, seed, n, partitions = parts)), bc)
+      val classified = Graft(spark).classify(Synth.corpus(spark, seed, n, partitions = parts))
       Threads.threads(classified)
         .select($"title_norm", $"size", $"articles")
         .as[(String, Long, Seq[String])].collect().sortBy(_._1).toSeq
@@ -106,8 +103,7 @@ class PipelineSpec extends AnyFunSuite {
 
   test("top: per-category buckets include 'any', ranked by size desc") {
     import spark.implicits._
-    val bc = spark.sparkContext.broadcast(Classify.loadDicts())
-    val classified = Classify.run(Extract.run(Synth.corpus(spark, seed, n)), bc)
+    val classified = Graft(spark).classify(Synth.corpus(spark, seed, n))
     val top = Threads.top(Threads.threads(classified)).collect()
     val byCat = top.groupBy(_.getString(0))
     assert(byCat.contains("any"))
@@ -177,59 +173,62 @@ class PipelineSpec extends AnyFunSuite {
 
   test("steady-state classify scans the corpus exactly ONCE across many actions") {
     import spark.implicits._
-    // VERDICT r2 item 1's done-criterion: one classify job = one corpus
-    // scan. The accumulator counts every corpus row that crosses the
-    // extraction input — the IDF pass, the classify pass, and THREE
-    // downstream actions (count, threads, fuzzy threads) must all feed
-    // from the persisted caches, not re-extract.
+    // VERDICT r2 item 1's done-criterion on the production path: the
+    // CLI's persisted steady state (cli.Main.classifySteadyState). The
+    // accumulator counts every corpus row that crosses the extraction
+    // input — the IDF pass, the classify pass, and THREE downstream
+    // actions (count, threads, fuzzy threads) must all feed from the
+    // persisted caches, not re-extract.
     val nDocs = 600L
     val acc = spark.sparkContext.longAccumulator("corpus_rows_scanned")
     val docs = Synth.corpus(spark, seed, nDocs)
       .mapPartitions { it => it.map { d => acc.add(1); d } }
-    val bc = spark.sparkContext.broadcast(Classify.defaultDicts)
-    val classified = Classify.runCached(Extract.run(docs), bc)
-    val nKept = classified.count()
-    Threads.threads(classified).count()
-    Threads.threadsFuzzy(classified).count()
-    assert(nKept > 0)
-    assert(acc.value == nDocs,
-      s"corpus scanned ${acc.value} rows for $nDocs docs — more than one pass")
-    classified.unpersist()
+    val (classified, release, _) = graft.cli.Main.classifySteadyState(spark, docs, Map.empty)
+    try {
+      val nKept = classified.count()
+      Threads.threads(classified).count()
+      Threads.threadsFuzzy(classified).count()
+      assert(nKept > 0)
+      assert(acc.value == nDocs,
+        s"corpus scanned ${acc.value} rows for $nDocs docs — more than one pass")
+    } finally release()
   }
 
   test("fused classify (r5 pipeline shape) scans the corpus exactly ONCE") {
     import spark.implicits._
     // VERDICT r4 item 1: the thread aggregation IS the materializing
-    // action — classify map work pipelines into its shuffle map side,
-    // and afterwards every consumer (count, top) feeds from the caches.
-    // One corpus pass total, same invariant as the count()-based path.
+    // action over the production steady state — classify map work
+    // pipelines into its shuffle map side, and afterwards every consumer
+    // (top, count) feeds from the caches. One corpus pass total, same
+    // invariant as the count()-first path.
     val nDocs = 600L
     val acc = spark.sparkContext.longAccumulator("corpus_rows_scanned_fused")
     val docs = Synth.corpus(spark, seed, nDocs)
       .mapPartitions { it => it.map { d => acc.add(1); d } }
-    val bc = spark.sparkContext.broadcast(Classify.defaultDicts)
-    var th: org.apache.spark.sql.DataFrame = null
-    val classified = Classify.runCachedSlimFused(
-      graft.extract.ExtractTitleExpr.run(docs.toDF()), bc) { cls =>
-      th = Threads.threads(cls)
+    val (classified, release, _) = graft.cli.Main.classifySteadyState(spark, docs, Map.empty)
+    try {
+      val th = Threads.threads(classified)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       th.count()
-    }
-    Threads.top(th).count()
-    val nKept = classified.count()
-    assert(nKept > 0)
-    assert(acc.value == nDocs,
-      s"corpus scanned ${acc.value} rows for $nDocs docs — more than one pass")
-    // fused result ≡ the count()-materialized path (canonical key:
-    // Array cells compare by identity inside toString)
-    val plain = Classify.runCachedSlim(
-      graft.extract.ExtractTitleExpr.run(Synth.corpus(spark, seed, nDocs).toDF()), bc)
-    def key(c: graft.model.ClassifiedDoc) =
-      (c.doc_id, c.lang, c.title_norm, c.category, c.is_news,
-        c.entities.map { case (k, v) => k -> v.toSeq }.toSeq.sortBy(_._1))
-    assert(classified.collect().map(key).sortBy(_._1).toSeq ==
-      plain.collect().map(key).sortBy(_._1).toSeq)
-    th.unpersist(); classified.unpersist(); plain.unpersist()
+      Threads.top(th).count()
+      val nKept = classified.count()
+      assert(nKept > 0)
+      assert(acc.value == nDocs,
+        s"corpus scanned ${acc.value} rows for $nDocs docs — more than one pass")
+      th.unpersist()
+      // fused production rows ≡ the typed spec over the same extraction
+      // and IDF (canonical key: Array cells compare by identity inside
+      // toString)
+      val bc = Classify.dictsBroadcast(spark)
+      val extracted = graft.extract.ExtractTitleExpr.run(Synth.corpus(spark, seed, nDocs).toDF())
+      val spec = Classify.runWithIdfSlimTyped(extracted, bc,
+        spark.sparkContext.broadcast(Classify.computeIdf(extracted, bc.value)))
+      def key(c: graft.model.ClassifiedDoc) =
+        (c.doc_id, c.lang, c.title_norm, c.category, c.is_news,
+          c.entities.map { case (k, v) => k -> v.toSeq }.toSeq.sortBy(_._1))
+      assert(classified.collect().map(key).sortBy(_._1).toSeq ==
+        spec.collect().map(key).sortBy(_._1).toSeq)
+    } finally release()
   }
 
   test("languages-verb shape: ONE extraction feeds stdout AND the checkpointed table") {

@@ -501,8 +501,7 @@ class StreamSpec extends AnyFunSuite {
     val bc = graft.gloss.Classify.dictsBroadcast(spark)
     val batchSlim = graft.extract.ExtractTitleExpr.run(spark.read.parquet(dir.toString))
     val bcIdf = spark.sparkContext.broadcast(
-      graft.gloss.Classify.idfFromTable(
-        graft.gloss.Classify.dfTableSlim(batchSlim, bc.value)))
+      graft.gloss.Classify.computeIdf(batchSlim, bc.value))
     def key(rows: Array[graft.model.ClassifiedDoc]) =
       rows.map(c => (c.doc_id, c.lang, c.category, c.is_news)).sortBy(_._1).toSeq
     val batch = key(graft.gloss.Classify
@@ -593,9 +592,7 @@ class StreamSpec extends AnyFunSuite {
     // classified corpus from the real pipeline, staged as MANY parquet
     // files → many microbatches; a hot title spans batches so the
     // streaming accumulation must merge across them
-    val bc = spark.sparkContext.broadcast(graft.gloss.Classify.defaultDicts)
-    val classified = graft.gloss.Classify.runCached(
-      graft.extract.Extract.run(graft.synth.Synth.corpus(spark, 42L, 800L)), bc)
+    val classified = Graft(spark).classify(graft.synth.Synth.corpus(spark, 42L, 800L))
     val dir = Files.createTempDirectory("clsstream").toString
     classified.toDF().repartition(7).write.mode("overwrite").parquet(dir)
     def key(df: DataFrame) = df
@@ -607,7 +604,6 @@ class StreamSpec extends AnyFunSuite {
       spark.read.parquet(dir).as[graft.model.ClassifiedDoc]))
     assert(streamed == batch)
     assert(batch.nonEmpty)
-    classified.unpersist()
   }
 
   test("reliable-checkpoint switch: fuzzy threads identical with spark.graft.checkpointDir set") {
