@@ -1,11 +1,13 @@
 package graft
 
 /** Single-threaded stage microbenchmark for the extraction kernel
-  * (fuse/tokenize/dom/emit/langid). Dev tool: `sbt "runMain graft.Micro"`.
+  * (fuse/dom/emit/scan+emit/langid). `scan+emit` is the production
+  * kernel (ByteScanner → StreamEmitter); `dom`/`emit` time the DOM-walk
+  * spec. Dev tool: `sbt "runMain graft.Micro"`.
   */
 import graft.synth.Synth
 import graft.model.Doc
-import graft.html.{Tokenizer, DomBuilder, SpanEmitter}
+import graft.html.{DomBuilder, SpanEmitter, StreamEmitter}
 import graft.extract.Extract
 
 object Micro {
@@ -21,13 +23,11 @@ object Micro {
       println(f"$label: ${(System.nanoTime()-t0)/1e6/reps}%.1f ms/rep")
     }
     time("fuse     ", 5)(docs.foreach(d => Extract.fuse(d.spans)))
-    time("tokenize ", 5)(fused.foreach(f => Tokenizer.tokenize(f.stream)))
-    val toks = fused.map(f => Tokenizer.tokenize(f.stream))
-    time("dom      ", 5)(toks.foreach(t => DomBuilder.build(t)))
-    val doms = toks.map(DomBuilder.build)
+    time("dom      ", 5)(fused.foreach(f => DomBuilder.build(f.stream)))
+    val doms = fused.map(f => DomBuilder.build(f.stream))
     time("emit     ", 5)(doms.zip(fused).foreach { case (d, f) => SpanEmitter.emit(d, f.media) })
-    time("emitStream", 5)(toks.zip(fused).foreach { case (t, f) => graft.html.StreamEmitter.emit(t, f.media) })
-    time("tok+emitFused", 5)(fused.foreach(f => graft.html.StreamEmitter.emitStreaming(f.stream, f.media)))
+    val bytes = fused.map(_.stream.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    time("scan+emit", 5)(bytes.zip(fused).foreach { case (b, f) => StreamEmitter.emitStreamingBytes(b, b.length, f.media) })
     val emits = doms.zip(fused).map { case (d, f) => SpanEmitter.emit(d, f.media) }
     time("langid   ", 5)(emits.foreach { r =>
       val lead = r.spans.iterator.filter(_.kind == "text").map(_.text).take(3).mkString(" ")

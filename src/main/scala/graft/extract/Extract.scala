@@ -11,15 +11,20 @@ import org.apache.spark.sql.Dataset
   * §4.3.1): per doc, the interleaved input spans are fused into a single
   * byte stream — consecutive `html` spans concatenate; each `media` span
   * becomes a `<graft-media data-i="K">` placeholder resolved through a
-  * side table, so ONE tokenizer pass covers the whole document while
+  * side table, so ONE scanner pass covers the whole document while
   * media keep their interleaved positions (FIXTURES.md §1).
   *
-  * Then: tokenize → DOM → boilerplate-strip span emission → language
-  * gate (en/ru, reference: src/parser.rs:150-173) → title = last <h1>
-  * (reference: src/parser.rs:138-140). Docs with no title and no text
-  * spans are dropped (generalizing src/parser.rs:144-146, Q9).
+  * Then: UTF-8 bytes → [[graft.html.ByteScanner]] → boilerplate-strip
+  * span emission → language gate (en/ru, reference:
+  * src/parser.rs:150-173) → title = last <h1> (reference:
+  * src/parser.rs:138-140). Docs with no title and no text spans are
+  * dropped (generalizing src/parser.rs:144-146, Q9).
   *
-  * No shuffle; the whole stage is scan → mapPartitions → (downstream).
+  * This typed path is the reference that ByteExtractSpec compares the
+  * Tungsten expression ([[ExtractSpansExpr]]) against: the two share the
+  * scanner, the machine and [[gate]], but fuse and handle nulls on their
+  * own. No shuffle; the whole stage is scan → mapPartitions →
+  * (downstream).
   */
 object Extract {
 
@@ -70,9 +75,8 @@ object Extract {
   def extractOne(doc: Doc): Option[ExtractedDoc] = {
     if (doc.spans == null || doc.spans.isEmpty) return None
     val fused = fuse(doc.spans)
-    // fused tokenizer→emitter (== DOM-walk SpanEmitter, asserted by
-    // StreamEquivalenceSpec; the DOM path remains the executable spec)
-    val res = StreamEmitter.emitStreaming(fused.stream, fused.media)
+    val bytes = fused.stream.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    val res = StreamEmitter.emitStreamingBytes(bytes, bytes.length, fused.media)
     gate(res).map { case (lang, titleNorm) =>
       ExtractedDoc(
         doc_id = doc.doc_id,

@@ -25,8 +25,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * UTF8String. No Doc/Span objects, no UTF-16 round trip for the ~70% of
   * bytes the extractor drops.
   *
-  * Semantics are IDENTICAL to [[Extract.extractOne]] — same machine,
-  * same [[Extract.gate]] — asserted row-for-row by ByteExtractSpec.
+  * Semantics are IDENTICAL to [[Extract.extractOne]] — same scanner,
+  * same machine, same [[Extract.gate]]; only the fuse (bytes here,
+  * Strings there) and the null handling are its own — asserted
+  * row-for-row by ByteExtractSpec.
   * Returns null for dropped docs (filter `isNotNull` downstream).
   */
 case class ExtractSpansExpr(child: Expression)

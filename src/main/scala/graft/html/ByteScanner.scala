@@ -1,25 +1,60 @@
 package graft.html
 
-/** Byte-level twin of [[Tokenizer.stream]]: scans raw UTF-8 bytes and
-  * pushes the SAME [[TokenSink]] events. HTML structure (tags, attribute
-  * quoting, comments, raw-text elements) is pure ASCII, so the scanner
-  * never decodes; only KEPT text runs (and wanted-tag attribute values)
-  * are decoded to String — which is what makes this the hot path for
-  * Tungsten input: the full document's UTF-8 → UTF-16 conversion and the
-  * Doc/Span object materialization of the encoder boundary are skipped,
-  * and dropped boilerplate/scripts/tags are never decoded at all
-  * (see [[graft.extract.ExtractSpansExpr]]).
+/** Push-mode consumer for [[ByteScanner.stream]]: the extraction machine
+  * ([[StreamEmitter]]) in production and the DOM builder
+  * ([[DomBuilder]]) for the executable spec.
+  */
+trait TokenSink {
+  def onText(decoded: String): Unit
+  def onStartTag(name: String, attrs: List[(String, String)], selfClosing: Boolean): Unit
+  def onEndTag(name: String): Unit
+}
+
+/** The HTML scanner: a from-scratch, allocation-light, never-throw state
+  * machine (HTML5-inspired, not spec-complete) over raw UTF-8 bytes. It
+  * must survive arbitrary malformed bytes, invalid UTF-8 included. The
+  * reference delegates parsing to the `select` crate (reference:
+  * src/parser.rs:132-134); owning the scanner keeps extraction
+  * deterministic and auditable.
   *
-  * Parity contract with the char scanner (asserted by ByteExtractSpec
-  * over the synth oracle corpus, adversarial markup, and random fuzz):
-  * identical events for any valid UTF-8 input. Both scanners fold tag
-  * names ASCII-only (HTML5 §13.2.5 — a Unicode case-fold like U+017F ſ
-  * must not match `s` in a tag name). Known deliberate deviation: a
-  * non-ASCII Unicode whitespace INSIDE a tag (e.g. U+2028 between
-  * attributes — malformed HTML) separates attributes on the char path
-  * but not here.
+  * HTML structure (tags, attribute quoting, comments, raw-text elements)
+  * is pure ASCII, so the scanner never decodes; only KEPT text runs (and
+  * wanted-tag attribute values) become Strings. Tag parts are separated
+  * on ASCII whitespace only, and tag names fold ASCII-only (HTML5
+  * §13.2.5: a Unicode case-fold like U+017F ſ must not match `s` in a
+  * tag name).
   */
 object ByteScanner {
+
+  /** Elements whose content never parses as markup: script/style (raw
+    * text) plus title/textarea (RCDATA — treated as raw and DROPPED,
+    * matching the emitter's head/boiler semantics; stray `<p>` inside a
+    * textarea must not open a block).
+    */
+  private val RawText = Set("script", "style", "title", "textarea")
+
+  // canonical tag/attr names: region-matched case-insensitively against
+  // the source, so the common path allocates NO per-tag strings
+  private val CanonNames: Array[String] = Array(
+    "a", "b", "i", "p", "em", "h1", "h2", "h3", "h4", "h5", "h6", "u",
+    "ul", "ol", "li", "td", "th", "tr", "div", "img", "nav", "pre",
+    "span", "body", "html", "head", "form", "meta", "link", "table",
+    "aside", "video", "audio", "embed", "small", "title", "strong",
+    "footer", "header", "iframe", "script", "style", "button", "select",
+    "option", "source", "figure", "article", "section", "textarea",
+    "figcaption", "blockquote", "noscript", "template", "main", "center",
+    "graft-media", "src", "alt", "href", "class", "id", "rel", "type",
+    "name", "content", "data-i", "summary", "dd", "dt", "hr", "br")
+
+  private val canonByKey: java.util.HashMap[Integer, Array[String]] = {
+    val m = new java.util.HashMap[Integer, Array[String]]()
+    CanonNames.foreach { nm =>
+      val key = Integer.valueOf(nm.length * 128 + nm.charAt(0))
+      val prev = m.get(key)
+      m.put(key, if (prev == null) Array(nm) else prev :+ nm)
+    }
+    m
+  }
 
   private def isWs(b: Byte): Boolean =
     b == ' ' || b == '\t' || b == '\n' || b == '\r' || b == '\f' || b == 0x0b
@@ -27,18 +62,22 @@ object ByteScanner {
   private def isNameStart(b: Byte): Boolean =
     (b >= 'a' && b <= 'z') || (b >= 'A' && b <= 'Z')
 
+  /** ASCII lower-case fold — HTML tag/attr names are ASCII-case-
+    * insensitive ONLY (HTML5 §13.2.5); Unicode folding (e.g. U+017F ſ →
+    * S, U+0131 ı) must NOT match tag names.
+    */
   private def lower(b: Byte): Int =
     if (b >= 'A' && b <= 'Z') b + 32 else b & 0xff
 
   /** Canonical tag/attr name for bytes [from, until) — allocation-free on
-    * the known-name path (same canonical table as the char scanner).
+    * the known-name path.
     */
   private def canonName(bytes: Array[Byte], from: Int, until: Int): String = {
     val len = until - from
     if (len > 0 && len <= 11) {
       val c0 = lower(bytes(from))
       if (c0 < 128) {
-        val cands = Tokenizer.canonByKeyShared.get(Integer.valueOf(len * 128 + c0))
+        val cands = canonByKey.get(Integer.valueOf(len * 128 + c0))
         if (cands != null) {
           var ci = 0
           while (ci < cands.length) {
@@ -55,12 +94,12 @@ object ByteScanner {
         }
       }
     }
-    // ASCII fold only (HTML5 tag names; matches the char scanner exactly)
-    val raw = new String(bytes, from, len, java.nio.charset.StandardCharsets.UTF_8)
-    val b = new java.lang.StringBuilder(raw.length)
+    // fold before decoding: ASCII bytes are never part of a multibyte
+    // sequence, so this equals decoding then folding ASCII chars
+    val folded = new Array[Byte](len)
     var k = 0
-    while (k < raw.length) { b.append(Tokenizer.asciiLower(raw.charAt(k))); k += 1 }
-    b.toString
+    while (k < len) { folded(k) = lower(bytes(from + k)).toByte; k += 1 }
+    str(folded, 0, len)
   }
 
   private def str(bytes: Array[Byte], from: Int, until: Int): String =
@@ -94,8 +133,15 @@ object ByteScanner {
     -1
   }
 
-  /** Scan `bytes[0, n)`, pushing events into `sink` — the byte twin of
-    * [[Tokenizer.stream]] (structure identical branch-for-branch).
+  /** Scan `bytes[0, n)`, pushing events into `sink`. Never throws; on
+    * truncated input, emits what it has.
+    *
+    * @param wantAttrs tags whose attributes the sink will read; for all
+    *                  other tags the attribute region is still scanned
+    *                  (quote-aware, to find the true `>`) but no names are
+    *                  canonicalized, no values decoded, and no list is
+    *                  allocated — the extraction machine only ever reads
+    *                  media-tag attrs.
     */
   def stream(bytes: Array[Byte], n: Int, sink: TokenSink,
              wantAttrs: String => Boolean = _ => true): Unit = {
@@ -235,9 +281,13 @@ object ByteScanner {
             i = j
             sink.onStartTag(name, if (attrs.isEmpty) Nil else attrs.reverse, selfClosing)
             // raw-text elements: consume until matching close tag, drop content
-            if (!selfClosing && Tokenizer.rawTextShared.contains(name)) {
+            if (!selfClosing && RawText.contains(name)) {
               val closer = "</" + name
-              val e = indexOfIgnoreCase(bytes, n, closer, i)
+              // only the exact end tag closes: `</scripts>` is content
+              var e = indexOfIgnoreCase(bytes, n, closer, i)
+              while (e >= 0 && e + closer.length < n && {
+                val nb = bytes(e + closer.length); nb != '/' && nb != '>' && !isWs(nb) })
+                e = indexOfIgnoreCase(bytes, n, closer, e + 1)
               if (e < 0) { i = n }
               else {
                 var g = e + closer.length

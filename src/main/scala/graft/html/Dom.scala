@@ -2,14 +2,16 @@ package graft.html
 
 import scala.collection.mutable.ArrayBuffer
 
-/** Lightweight DOM: element tree with text leaves. Built from the token
-  * stream with HTML5-ish tag-omission recovery (implied </p>, </li>, …)
-  * and void-element handling. Never throws on malformed nesting.
+/** Lightweight DOM: element tree with text leaves. Built from
+  * [[ByteScanner]] events with HTML5-ish tag-omission recovery (implied
+  * </p>, </li>, …) and void-element handling. Never throws on malformed
+  * nesting. The DOM walk ([[SpanEmitter]]) over this tree is the
+  * executable spec that [[StreamEmitter]] must reproduce.
   */
 sealed trait Node
 final class Element(val name: String, val attrs: List[(String, String)]) extends Node {
   val children: ArrayBuffer[Node] = new ArrayBuffer[Node](4)
-  /** Attribute values are stored raw by the tokenizer; entity-decode on
+  /** Attribute values are stored raw by the scanner; entity-decode on
     * access (attrs are only read for media elements).
     */
   def attr(key: String): String =
@@ -35,7 +37,10 @@ object DomBuilder {
     "nav", "header", "footer", "h1", "h2", "h3", "h4", "h5", "h6",
     "blockquote", "pre", "form", "hr", "figure")
 
-  def build(toks: ArrayBuffer[Tok]): Element = {
+  /** Parse `html` (scanned as UTF-8 bytes, every tag's attributes kept)
+    * into a tree under a synthetic `#root` element.
+    */
+  def build(html: String): Element = {
     val root = new Element("#root", Nil)
     val stack = new ArrayBuffer[Element](16)
     stack += root
@@ -48,21 +53,21 @@ object DomBuilder {
       if (idx >= 1) { stack.takeInPlace(idx); true } else false
     }
 
-    var ti = 0
-    while (ti < toks.length) {
-      toks(ti) match {
-        case Text(d) =>
+    if (html != null) {
+      val bytes = html.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+      ByteScanner.stream(bytes, bytes.length, new TokenSink {
+        def onText(d: String): Unit =
           if (d.nonEmpty) top.children += TextNode(d)
-        case StartTag(name, attrs, selfClosing) =>
+        def onStartTag(name: String, attrs: List[(String, String)], selfClosing: Boolean): Unit = {
           if (ClosesP.contains(name) && top.name == "p") closeUpTo("p")
           if (SelfNesting.contains(name) && top.name == name) closeUpTo(name)
           val el = new Element(name, attrs)
           top.children += el
           if (!selfClosing && !Void.contains(name)) stack += el
-        case EndTag(name) =>
+        }
+        def onEndTag(name: String): Unit =
           if (!Void.contains(name)) closeUpTo(name) // unmatched close → ignored
-      }
-      ti += 1
+      })
     }
     root
   }

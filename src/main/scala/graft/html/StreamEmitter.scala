@@ -3,12 +3,12 @@ package graft.html
 import graft.model.Span
 import scala.collection.mutable.ArrayBuffer
 
-/** Single-pass streaming span emitter: consumes the token stream directly
-  * (no DOM materialization) and reproduces [[SpanEmitter]]'s output —
-  * asserted over the seeded corpus + targeted cases by
-  * StreamEquivalenceSpec, and by the span-fixture oracle. This is the
-  * extraction hot path; [[SpanEmitter]] stays as the executable
-  * specification.
+/** Single-pass streaming span emitter: consumes [[ByteScanner]] events
+  * directly (no DOM materialization) and reproduces the DOM walk
+  * ([[DomBuilder]] + [[SpanEmitter]]) over the same events — asserted
+  * over the seeded corpus + targeted cases by StreamEquivalenceSpec, and
+  * by the span-fixture oracle. This is the extraction hot path;
+  * [[SpanEmitter]] stays as the executable specification.
   *
   * Per-frame flags make push/pop exactly symmetric; the machine mirrors
   * the DOM walk semantics: boiler subtrees suppressed; the outermost
@@ -47,39 +47,16 @@ object StreamEmitter {
   private final val FMediaRoot = 16 // opened the media-skip region
   private final val FFlush = 32 // structural flow frame: flush run on close
 
-  /** Buffered form (tests): replay collected tokens into the machine. */
-  def emit(toks: ArrayBuffer[Tok], mediaTable: Array[(String, String)]): SpanEmitter.Result = {
-    val m = new Machine(mediaTable)
-    var ti = 0
-    while (ti < toks.length) {
-      toks(ti) match {
-        case Text(d) => m.onText(d)
-        case StartTag(n, a, sc) => m.onStartTag(n, a, sc)
-        case EndTag(n) => m.onEndTag(n)
-      }
-      ti += 1
-    }
-    m.finish()
-  }
-
   /** The only tags whose attributes the machine reads (src/alt/data-i on
-    * media elements) — everything else tokenizes attribute-free.
+    * media elements) — everything else scans attribute-free.
     */
   private val AttrTags: Set[String] =
     Set("img", "iframe", "embed", "graft-media", "video", "audio", "source")
 
-  /** Fused hot path: tokenizer events drive the machine directly — no
-    * token buffer, no Tok allocation, no attr lists for non-media tags.
-    */
-  def emitStreaming(html: String, mediaTable: Array[(String, String)]): SpanEmitter.Result = {
-    val m = new Machine(mediaTable)
-    Tokenizer.stream(html, m, AttrTags)
-    m.finish()
-  }
-
-  /** Byte-input twin of [[emitStreaming]]: same machine, fed by
-    * [[ByteScanner]] — the raw UTF-8 never becomes a String except for
-    * kept text runs and media-tag attribute values.
+  /** The extraction kernel: [[ByteScanner]] events drive the machine
+    * directly — the raw UTF-8 never becomes a String except for kept text
+    * runs and media-tag attribute values; no token buffer, no attr lists
+    * for non-media tags.
     */
   def emitStreamingBytes(html: Array[Byte], len: Int,
                          mediaTable: Array[(String, String)]): SpanEmitter.Result = {

@@ -20,10 +20,13 @@ object TextOps {
 
   // ---------- text analysis ------------------------------------------------
 
-  /** Whitespace token count — pure expression, codegen'd. */
+  /** Whitespace token count — pure expression, codegen'd. Splits on
+    * [[RepWsPattern]] (RE2's `\s`, the oracle's class; java `\s` would
+    * also split on vertical tab).
+    */
   def tokenCount(text: Column): Column =
     when(length(trim(text)) === 0, lit(0))
-      .otherwise(size(split(trim(text), "\\s+")))
+      .otherwise(size(split(trim(text), RepWsPattern)))
 
   /** Cyrillic-vs-Latin script heuristic language id (SQL-expressible twin
     * of graft.lang.LangId for oracle parity; the full detector is the
@@ -63,11 +66,12 @@ object TextOps {
   def bpeTokenCount(text: Column): Column =
     regexp_count(text, lit("[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]")).cast("long")
 
-  /** Document fingerprint: md5 of lowercased, whitespace-normalized text.
-    * md5 is bit-identical across Spark and DuckDB → oracle-checkable.
+  /** Document fingerprint: md5 of lowercased, whitespace-normalized text
+    * (runs of [[RepWsPattern]] → one space). md5 is bit-identical across
+    * Spark and DuckDB → oracle-checkable.
     */
   def fingerprint(text: Column): Column =
-    md5(regexp_replace(lower(text), "\\s+", " "))
+    md5(regexp_replace(lower(text), RepWsPattern, " "))
 
   /** Token document-frequency table (corpus vocabulary statistics): one
     * map-side-combinable shuffle on token (uniform key). The standard
@@ -85,7 +89,7 @@ object TextOps {
   def tokenDocFreq(docs: DataFrame, minDf: Long = 2): DataFrame =
     docs
       .select(col("doc_id"),
-        explode(array_distinct(split(lower(trim(col("text"))), "\\s+"))).as("token"))
+        explode(array_distinct(split(lower(trim(col("text"))), RepWsPattern))).as("token"))
       .filter(length(col("token")) > 0)
       .groupBy(col("token"))
       // doc frequency = count, NOT countDistinct: array_distinct makes

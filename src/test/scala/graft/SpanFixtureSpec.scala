@@ -1,6 +1,6 @@
 package graft
 
-import graft.extract.Extract
+import graft.extract.{Extract, ExtractSpansExpr}
 import graft.model.{Doc, Span}
 import graft.synth.Synth
 import org.scalatest.funsuite.AnyFunSuite
@@ -42,24 +42,37 @@ class SpanFixtureSpec extends AnyFunSuite {
   }
 
   test("byte path matches generator ground truth on all seeded docs") {
-    // same 5000-doc span ORACLE through the byte scanner: fuse → bytes →
-    // ByteScanner → machine → gate, mirroring ExtractSpansExpr.eval
+    // the production expression evaluated standalone (no Spark session):
+    // its own Tungsten fuse, the scanner + machine, the gate and the
+    // output row serialization, one doc at a time against the same oracle
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference, GenericInternalRow}
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    import org.apache.spark.sql.types.ArrayType
+    import org.apache.spark.unsafe.types.UTF8String
+    val expr = ExtractSpansExpr(
+      BoundReference(0, ArrayType(ExtractSpansExpr.SpanType), nullable = true))
+    def utf8(s: String) = if (s == null) null else UTF8String.fromString(s)
     var checked = 0
     (0 until n).foreach { i =>
       val t = Synth.gen(seed, i.toLong, nStories)
-      val fused = graft.extract.Extract.fuse(t.input)
-      val bytes = fused.stream.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      val res = graft.html.StreamEmitter.emitStreamingBytes(bytes, bytes.length, fused.media)
-      val gated = graft.extract.Extract.gate(res)
+      val spanRows = new GenericArrayData(t.input.map(s =>
+        new GenericInternalRow(Array[Any](utf8(s.kind), utf8(s.text), utf8(s.media_ref), s.offset)): Any))
+      val out = expr.eval(new GenericInternalRow(Array[Any](spanRows))).asInstanceOf[InternalRow]
       if (t.kept) {
-        assert(gated.isDefined, s"${t.doc_id}: byte path dropped a kept doc")
-        val (lang, titleNorm) = gated.get
-        assert(lang == t.lang && titleNorm == t.title_norm, t.doc_id)
-        val gs = res.spans.map(s => (s.kind, s.text, s.media_ref, s.offset)).toSeq
+        assert(out != null, s"${t.doc_id}: expression dropped a kept doc")
+        assert(out.getString(0) == t.lang && out.getString(1) == t.title_norm, t.doc_id)
+        val arr = out.getArray(2)
+        val gs = (0 until arr.numElements()).map { k =>
+          val r = arr.getStruct(k, 4)
+          (r.getString(0), r.getString(1), r.getString(2), r.getInt(3))
+        }
         val es = t.expected.map(s => (s.kind, s.text, s.media_ref, s.offset)).toSeq
-        assert(gs == es, s"${t.doc_id}: byte-path span mismatch")
+        assert(gs == es, s"${t.doc_id}: expression span mismatch")
+        assert(out.getInt(3) == es.count(_._1 == "text"), t.doc_id)
+        assert(out.getInt(4) == es.count(s => s._1 == "image" || s._1 == "embed"), t.doc_id)
       } else {
-        assert(gated.isEmpty, s"${t.doc_id}: byte path kept a dropped doc")
+        assert(out == null, s"${t.doc_id}: expression kept a dropped doc")
       }
       checked += 1
     }

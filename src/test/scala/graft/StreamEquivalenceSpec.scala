@@ -1,27 +1,23 @@
 package graft
 
-import graft.html.{DomBuilder, SpanEmitter, StreamEmitter, Tokenizer}
+import graft.html.{DomBuilder, SpanEmitter, StreamEmitter}
 import graft.synth.Synth
 import org.scalatest.funsuite.AnyFunSuite
 
 /** StreamEmitter (single-pass hot path) must reproduce SpanEmitter (the
-  * DOM-walk executable spec) exactly: seeded corpus, targeted cases, and
-  * randomized structured HTML.
+  * DOM-walk executable spec) exactly over the same ByteScanner events:
+  * seeded corpus, targeted cases, and randomized structured HTML.
   */
 class StreamEquivalenceSpec extends AnyFunSuite {
 
-  private def both(html: String) = {
-    val toks = Tokenizer.tokenize(html)
-    val dom = SpanEmitter.emit(DomBuilder.build(toks), Array.empty)
-    val str = StreamEmitter.emitStreaming(html, Array.empty) // the fused hot path
-    val buffered = StreamEmitter.emit(toks, Array.empty)
-    assert(str.title == buffered.title)
-    assert(str.spans.toSeq == buffered.spans.toSeq)
-    (dom, str)
+  private def both(html: String, media: Array[(String, String)]) = {
+    val dom = SpanEmitter.emit(DomBuilder.build(html), media)
+    val bytes = html.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    (dom, StreamEmitter.emitStreamingBytes(bytes, bytes.length, media))
   }
 
   private def assertSame(html: String): Unit = {
-    val (a, b) = both(html)
+    val (a, b) = both(html, Array.empty)
     assert(a.title == b.title, s"title mismatch on: $html")
     assert(
       a.spans.map(s => (s.kind, s.text, s.media_ref, s.offset)).toSeq ==
@@ -33,9 +29,7 @@ class StreamEquivalenceSpec extends AnyFunSuite {
     (0 until 3000).foreach { i =>
       val t = Synth.gen(42L, i.toLong, 60)
       val fused = graft.extract.Extract.fuse(t.input)
-      val toks = Tokenizer.tokenize(fused.stream)
-      val a = SpanEmitter.emit(DomBuilder.build(toks), fused.media)
-      val b = StreamEmitter.emit(toks, fused.media)
+      val (a, b) = both(fused.stream, fused.media)
       assert(a.title == b.title, s"${t.doc_id} title")
       assert(a.spans.toSeq.map(s => (s.kind, s.text, s.media_ref, s.offset)) ==
         b.spans.toSeq.map(s => (s.kind, s.text, s.media_ref, s.offset)), t.doc_id)

@@ -37,16 +37,18 @@ class TextOpsSpec extends AnyFunSuite with GenChecks {
     // df must count DOCUMENTS (array_distinct collapses within-doc
     // repeats), and the one-shuffle count form must equal the
     // distinct-aggregation form exactly (each (doc_id, token) survives
-    // the explode once because doc_id is unique)
+    // the explode once because doc_id is unique). Vertical tab is not
+    // whitespace under the oracle's RE2 \s: "vt\u000Bjoined" is ONE
+    // token in both docs 52 and 53
     val docs = ((0L until 40L).map(i => (i, s"alpha beta beta tok$i  ALPHA")) ++
       (40L until 50L).map(i => (i, "the same dup text body")) ++
-      Seq((50L, ""), (51L, "alpha")))
+      Seq((50L, ""), (51L, "alpha"), (52L, "vt\u000Bjoined"), (53L, "vt\u000Bjoined alpha")))
       .toDF("doc_id", "text")
     val fast = TextOps.tokenDocFreq(docs, minDf = 2)
       .as[(String, Long)].collect().toMap
     val distinctForm = docs
       .select(col("doc_id"),
-        explode(array_distinct(split(lower(trim(col("text"))), "\\s+"))).as("token"))
+        explode(array_distinct(split(lower(trim(col("text"))), TextOps.RepWsPattern))).as("token"))
       .filter(length(col("token")) > 0)
       .groupBy(col("token"))
       .agg(countDistinct(col("doc_id")).as("df"))
@@ -54,9 +56,10 @@ class TextOpsSpec extends AnyFunSuite with GenChecks {
       .as[(String, Long)].collect().toMap
     assert(fast == distinctForm)
     // spot values: "alpha" appears once per doc 0-39 despite ALPHA/alpha
-    // within-doc repeats, plus doc 51
-    assert(fast("alpha") == 41L)
+    // within-doc repeats, plus docs 51 and 53
+    assert(fast("alpha") == 42L)
     assert(fast("dup") == 10L)
+    assert(fast("vt\u000Bjoined") == 2L && !fast.contains("vt") && !fast.contains("joined"))
     assert(!fast.contains("tok3")) // df=1 < minDf
     // and the plan actually lost the distinct aggregation: exactly one
     // Exchange (on token), no expand/two-phase distinct
@@ -202,6 +205,14 @@ class TextOpsSpec extends AnyFunSuite with GenChecks {
     // we rely on (i+dot vs i) — just pin kernel ≡ twin above.
     assert(native(5L) == (6L, 6666L, 6000L))
     assert(native(15L) == (3L, 3333L, 0L))
+    // tokenCount and fingerprint share that class (RE2 \s in their
+    // oracles): the VT row is 3 tokens, and its VT survives normalization
+    val vt = docs.filter(col("doc_id") === 15L)
+      .select(TextOps.tokenCount(col("text")).cast("long"), TextOps.fingerprint(col("text")))
+      .as[(Long, String)].head()
+    val vtMd5 = java.security.MessageDigest.getInstance("MD5")
+      .digest("a\u000Bb c a\u000Bb".getBytes("UTF-8")).map(b => f"${b & 0xff}%02x").mkString
+    assert(vt == ((3L, vtMd5)))
     // scale/plan shape: per-row map only — no Exchange; the native path
     // really is the single-pass kernel (no HOF gram builder), and it
     // appears EXACTLY ONCE in the optimized AND physical plans although
