@@ -3,7 +3,7 @@ package graft
 import graft.extract.Extract
 import graft.model.Doc
 import graft.synth.Synth
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Bench main (driver contract): one JSON line with per-query seconds over
   * SPARK_GRAFT_SF_DIR plus the headline extraction-throughput metric
@@ -82,11 +82,7 @@ object Bench {
 
   def session(cpus: String): SparkSession = SparkSession.builder()
     .master(s"local[$cpus]")
-    // default: one shuffle partition per core. SPARK_GRAFT_SHUFFLE
-    // overrides for granularity experiments (AQE can only coalesce DOWN
-    // from this number, so it is the upper bound on reduce parallelism)
-    .config("spark.sql.shuffle.partitions",
-      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus))
+    .config("spark.sql.shuffle.partitions", cpus)
     .config("spark.sql.adaptive.enabled", "true")
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
@@ -178,6 +174,22 @@ object Bench {
     (n, (System.nanoTime() - t0) / 1e9)
   }
 
+  /** Times each query's `count()` in order. A query that throws is still
+    * timed (to the failure) and its name is returned in the second list,
+    * so a failure is never mistaken for a fast success.
+    */
+  private[graft] def timeQueries(sess: SparkSession, sfDir: String,
+      queries: Seq[(String, (SparkSession, String) => DataFrame)])
+      : (Seq[(String, Double)], Seq[String]) = {
+    val failed = Seq.newBuilder[String]
+    val times = queries.map { case (name, fn) =>
+      val t0 = System.nanoTime()
+      try fn(sess, sfDir).count() catch { case _: Throwable => failed += name }
+      name -> (System.nanoTime() - t0) / 1e9
+    }
+    (times, failed.result())
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -214,13 +226,9 @@ object Bench {
     // above is the recorded noise tell (a depressed sweep total with
     // extract_docs_per_sec also depressed is host load, not a plan
     // change — VERDICT r4 "what's wrong" 1).
-    def sweep(): Seq[(String, Double)] = {
+    def sweep(): (Seq[(String, Double)], Seq[String]) = {
       val sess = spark.newSession()
-      val out = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-        val t0 = System.nanoTime()
-        try { fn(sess, sfDir).count() } catch { case _: Throwable => -1L }
-        name -> (System.nanoTime() - t0) / 1e9
-      }
+      val out = timeQueries(sess, sfDir, SparkEntry.queries.toSeq.sortBy(_._1))
       // drop this sweep's persisted memo caches before the next sweep
       // builds its own copies — the shared block manager would otherwise
       // hold N stale cache sets, and the eviction/GC pressure would
@@ -243,7 +251,7 @@ object Bench {
       if (updateRef && t > quietRef) quietRef = t
       t
     }
-    val chosen = scala.collection.mutable.ArrayBuffer.empty[(Seq[(String, Double)], Double)]
+    val chosen = scala.collection.mutable.ArrayBuffer.empty[((Seq[(String, Double)], Seq[String]), Double)]
     (1 to 3).foreach { _ =>
       val tell0 = tellNow(updateRef = true)
       val run0 = sweep()
@@ -276,7 +284,8 @@ object Bench {
       }
       idx += 1
     }
-    val sweeps = chosen.toSeq.map(_._1)
+    val sweeps = chosen.toSeq.map(_._1._1)
+    val failedQueries = chosen.toSeq.flatMap(_._1._2).distinct.sorted
     val tells = chosen.toSeq.map(_._2)
     val flags = tells.map(_ < 0.6 * gateRef)
     // cross-session reference (VERDICT r6 item 2): the in-session gate is
@@ -310,7 +319,8 @@ object Bench {
       s""""extract_expr_docs_per_sec":${nDocs / exprSec},""" +
       s""""fused_docs_per_sec":${nDocs / fusedSec},""" +
       s""""pdf_docs":$pdfDocs,"pdf_extract_docs_per_sec":${pdfDocs / pdfSec},""" +
-      s""""extract_task_skew":$skew,"extract_tasks":$nTasks,"cpus":$cpus}"""
+      s""""extract_task_skew":$skew,"extract_tasks":$nTasks,"cpus":$cpus,""" +
+      s""""failed_queries":[${failedQueries.map("\"" + _ + "\"").mkString(",")}]}"""
     println(line)
     // sbt prefixes stdout with "[info] ", which broke the driver's JSON
     // parse in round 1 — the file copy is the machine-readable channel
@@ -322,14 +332,13 @@ object Bench {
 /** Scaling-efficiency evidence (north_rule: N→4N executors ≥ 0.8).
   * In-sandbox stand-in: the identical extraction job at local[N] vs
   * local[4N] over byte-identical input (same materialized parquet, same
-  * 128-task split — only executor-thread count varies). Primary pair
-  * N=4 → 4N=16 (physical cores); 8 → 32 crosses into SMT siblings where
-  * the HARDWARE caps speedup at ~2.8× (measured with a pure-JVM burn) —
-  * both reported in BENCH/BASELINE.md.
+  * 128-task split — only executor-thread count varies). On a 4-core
+  * host the one honest pair is N=1 → 4N=4; a larger N oversubscribes
+  * the cores and measures the host, not the job.
   *
   * {{{
-  *   SPARK_GRAFT_CPUS=4  sbt "runMain graft.ScalingBench 400000"
-  *   SPARK_GRAFT_CPUS=16 sbt "runMain graft.ScalingBench 400000"
+  *   SPARK_GRAFT_CPUS=1 sbt "runMain graft.ScalingBench 400000"
+  *   SPARK_GRAFT_CPUS=4 sbt "runMain graft.ScalingBench 400000"
   * }}}
   */
 object ScalingBench {
@@ -364,47 +373,6 @@ object ScalingBench {
     sec
   }
 
-  /** Stage-by-stage pipeline profile at one parallelism level — the
-    * evidence tool behind the N→4N full-pipeline scaling work: where does
-    * the 16-core floor actually go? One JSON line per repeat with
-    * per-stage seconds (extract+IDF+collect, IDF broadcast,
-    * classify fused into the thread agg, top).
-    *
-    * {{{ SPARK_GRAFT_CPUS=16 sbt "runMain graft.PipeProfile 1000000 3" }}}
-    */
-  def profile(spark: SparkSession, pq: String, nDocs: Long, cpus: String, repeat: Int): String = {
-    import org.apache.spark.storage.StorageLevel
-    def tick[T](f: => T): (T, Double) = {
-      val t0 = System.nanoTime(); val v = f; (v, (System.nanoTime() - t0) / 1e9)
-    }
-    // per-repeat extraction tell: the ONLY trustworthy noise signal on
-    // this host (CPU steal is load-average-invisible — r6/r7 both caught
-    // same-command 30% swings within an hour); compare against the
-    // documented quiet refs in BENCH/BASELINE.md before trusting a repeat
-    val tellDocsPerSec = nDocs / Bench.timeExtractParquetExpr(spark, pq)._2
-    val bc = graft.gloss.Classify.dictsBroadcast(spark)
-    val tAll0 = System.nanoTime()
-    val slim = graft.extract.ExtractTitleExpr.run(spark.read.parquet(pq))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val (idf, tIdf) = tick(graft.gloss.Classify.idfFromTable(
-      graft.gloss.Classify.dfTableSlim(slim, bc.value)))
-    val (bcIdf, tBc) = tick(spark.sparkContext.broadcast(idf))
-    val cls = graft.gloss.Classify.runWithIdfSlim(slim, bc, bcIdf)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val (th, tThreads) = tick {
-      val t = graft.threads.Threads.threads(cls).persist(StorageLevel.MEMORY_AND_DISK)
-      t.count(); t
-    }
-    slim.unpersist()
-    val (_, tTop) = tick(graft.threads.Threads.top(th).count())
-    val total = (System.nanoTime() - tAll0) / 1e9
-    th.unpersist(); cls.unpersist()
-    s"""{"profile":"pipeline","cpus":$cpus,"docs":$nDocs,"repeat":$repeat,""" +
-      s""""tell_docs_per_sec":${tellDocsPerSec.round},""" +
-      s""""extract_idf_collect":$tIdf,"bc_idf":$tBc,""" +
-      s""""classify_threads":$tThreads,"top":$tTop,"total":$total}"""
-  }
-
   def main(args: Array[String]): Unit = {
     val nDocs = if (args.nonEmpty) args(0).toLong else 400000L
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -429,132 +397,6 @@ object ScalingBench {
       s""""expr_sec":$exprSec,"expr_docs_per_sec":${nDocs / exprSec},""" +
       s""""fused_sec":$fusedSec,"fused_docs_per_sec":${nDocs / fusedSec},""" +
       s""""pipeline_sec":$pipeSec,"pipeline_docs_per_sec":${nDocs / pipeSec}}""")
-    spark.stop()
-  }
-}
-
-/** Stage attribution for the fuzzy thread clustering — the most
-  * expensive operator family at every tier. Dev tool:
-  * {{{ SPARK_GRAFT_CPUS=32 sbt "runMain graft.FuzzyProfile 2000000" }}}
-  * Each stage count RE-derives its upstream (nothing cached between
-  * ticks except fuzzyTitles' own cache), so ticks read as cumulative
-  * cost up to that stage.
-  */
-object FuzzyProfile {
-  def main(args: Array[String]): Unit = {
-    val nDocs = if (args.nonEmpty) args(0).toLong else 2000000L
-    val spark = Bench.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-    spark.sparkContext.setLogLevel("WARN")
-    val pq = Bench.corpusParquet(spark, nDocs, 128)
-    import spark.implicits._
-    val (classified, release, _) =
-      cli.Main.classifySteadyState(spark, spark.read.parquet(pq).as[Doc], Map.empty)
-    classified.count() // classify outside the ticks below
-    def tick(label: String)(f: => Long): Unit = {
-      val t0 = System.nanoTime(); val n = f
-      println(f"$label: ${(System.nanoTime() - t0) / 1e9}%.2f s (n=$n)")
-    }
-    tick("full threadsFuzzy (cold) ")(graft.threads.Threads.threadsFuzzy(classified).count())
-    val titles = graft.threads.Threads.fuzzyTitles(classified.toDF())
-    tick("1 distinct titles        ")(titles.count())
-    val asDocs = titles.select(
-      org.apache.spark.sql.functions.col("tid").as("doc_id"),
-      org.apache.spark.sql.functions.col("title_norm").as("text"))
-    tick("2a candidates unfiltered ")(graft.ops.Sketches
-      .minhashCandidatePairs(asDocs, shingleN = 1, bands = 4, rowsPerBand = 2).count())
-    tick("2b candidates ratio-filt ")(graft.ops.Sketches
-      .minhashCandidatePairs(asDocs, shingleN = 1, bands = 4, rowsPerBand = 2,
-        sizeRatioMinJaccard = 0.5).count())
-    tick("2c join-form cand+verify ")(graft.ops.Sketches.jaccardVerify(asDocs,
-      graft.ops.Sketches.minhashCandidatePairs(asDocs, shingleN = 1, bands = 4,
-        rowsPerBand = 2), shingleN = 1, minJaccard = 0.5).count())
-    val verified = graft.threads.Threads.fuzzyVerifiedPairs(titles)
-    tick("2 inline cand+verify     ")(verified.count())
-    tick("3 + connected components ")(graft.ops.Dedup.connectedComponentsAuto(verified).count())
-    tick("full again (titles warm) ")(graft.threads.Threads.threadsFuzzy(classified).count())
-    titles.unpersist()
-    release()
-    spark.stop()
-  }
-}
-
-/** Targeted per-query timing against SPARK_GRAFT_SF_DIR — the hotspot
-  * drill-down the full Bench sweep is too coarse for. Each QUERY of each
-  * repeat runs in its own fresh `newSession()`, so every timing is the
-  * query's STANDALONE cost — session-memoized builds (extraction /
-  * classification / near-dup pairs / IVF) are charged to every query
-  * that needs them, never silently migrated to whichever listed query
-  * happened to run first (a Bench sweep deliberately shares one session
-  * per sweep; this tool deliberately does not). The noise tell
-  * (extraction docs/s, same cached parquet as Bench) brackets the
-  * repeats so a loaded host reads as a depressed tell, not a regression.
-  *
-  * Usage: `QueryProfile [repeats] <query> [query...]` — a non-numeric
-  * first arg is taken as a query name with the default 3 repeats.
-  *
-  * {{{ SPARK_GRAFT_SF_DIR=/tmp/graft_sf1 sbt "runMain graft.QueryProfile 3 doc_neardup_groups ext_threads_fuzzy" }}}
-  */
-object QueryProfile {
-  def main(args: Array[String]): Unit = {
-    val (repeats, names) = args.toSeq match {
-      case Seq() => (3, Seq("doc_neardup_groups"))
-      case head +: rest if head.forall(_.isDigit) && head.nonEmpty =>
-        // guarded parse (ADVICE r7): an all-digit arg can still overflow
-        // Int (>9 digits) — that is a usage error (exit 2), not a
-        // NumberFormatException stack trace
-        scala.util.Try(head.toInt).toOption match {
-          case Some(r) if r >= 1 =>
-            (r, if (rest.nonEmpty) rest else Seq("doc_neardup_groups"))
-          case _ =>
-            System.err.println(s"invalid repeat count '$head' (need 1..${Int.MaxValue})")
-            sys.exit(2)
-        }
-      case all => (3, all)
-    }
-    val unknown = names.filterNot(SparkEntry.queries.contains)
-    if (unknown.nonEmpty) {
-      System.err.println(
-        s"unknown quer${if (unknown.size > 1) "ies" else "y"}: ${unknown.mkString(", ")}\n" +
-          s"valid names: ${SparkEntry.queries.keys.toSeq.sorted.mkString(", ")}")
-      sys.exit(2)
-    }
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Bench.session(cpus)
-    spark.sparkContext.setLogLevel("WARN")
-    val nDocs = Bench.corpusDocs(sfDir)
-    val pq = Bench.corpusParquet(spark, nDocs, 128)
-    graft.gloss.Classify.defaultDicts
-    Bench.timeExtractParquetExpr(spark, pq) // warmup
-    (1 to repeats).foreach { r =>
-      val tell = nDocs / Bench.timeExtractParquetExpr(spark, pq)._2
-      val ts = names.map { name =>
-        val sess = spark.newSession() // per-query: standalone cost, order-independent
-        val fn = SparkEntry.queries(name)
-        val t0 = System.nanoTime()
-        val n = fn(sess, sfDir).count()
-        val sec = (System.nanoTime() - t0) / 1e9
-        sess.catalog.clearCache()
-        f"$name=$sec%.3f (rows=$n)"
-      }
-      println(f"repeat $r tell=${tell.round} ${ts.mkString("  ")}")
-    }
-    spark.stop()
-  }
-}
-
-/** `runMain graft.PipeProfile [nDocs] [repeats]` — see [[ScalingBench.profile]]. */
-object PipeProfile {
-  def main(args: Array[String]): Unit = {
-    val nDocs = if (args.nonEmpty) args(0).toLong else 1000000L
-    val repeats = if (args.length > 1) args(1).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = Bench.session(cpus)
-    spark.sparkContext.setLogLevel("WARN")
-    val pq = Bench.corpusParquet(spark, nDocs, 128)
-    graft.gloss.Classify.defaultDicts
-    ScalingBench.timePipeline(spark, pq) // warmup (codegen + page cache)
-    (1 to repeats).foreach(r => println(ScalingBench.profile(spark, pq, nDocs, cpus, r)))
     spark.stop()
   }
 }

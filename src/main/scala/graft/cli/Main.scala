@@ -160,10 +160,10 @@ object Main {
     * persisted (it backs any not-yet-computed classified partitions)
     * until `release`, which frees both.
     *
-    * This is the ONE persisted classify shape: the verbs, the dev benches
-    * (ScalingBench, BenchLarge, FuzzyProfile) and PipelineSpec's one-scan
-    * test all call it; the benches and the test pass empty `opts` (no
-    * `--out`, so no `_idf` sidecar).
+    * This is the ONE persisted classify shape: the verbs, the
+    * `ScalingBench` pipeline stage and PipelineSpec's one-scan test all
+    * call it; the bench and the test pass empty `opts` (no `--out`, so
+    * no `_idf` sidecar).
     */
   private[graft] def classifySteadyState(spark: SparkSession, docs: Dataset[Doc],
       opts: Map[String, String]): (Dataset[graft.model.ClassifiedDoc], () => Unit, () => Unit) = {

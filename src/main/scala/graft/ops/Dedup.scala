@@ -122,8 +122,8 @@ object Dedup {
       // the pre-timer-fix run agreed: window median 2.98 vs 3.79 s)
       // and shuffled +36% bytes (149 vs 109 MB) — the agg
       // adds a mins-table exchange plus a join where the window needs
-      // one exchange + sort (`graft.BenchExtra ccstar`,
-      // OPTIMIZATION_r09.md). Skew exposure is bounded: window rows are
+      // one exchange + sort (ccstar A/B in OPTIMIZATION_r09.md).
+      // Skew exposure is bounded: window rows are
       // two longs (a 10^8-degree hub buffers ~1.6 GB in one spilling
       // task — slow, not fatal), hubs shrink after round one, and the
       // agg form's SMJ join-back concentrates the same hot key anyway.

@@ -475,10 +475,10 @@ object TextOps {
 
   /** The r8 WINDOW form of [[curated]], kept as the executable reference
     * (the shape the frozen DuckDB oracle expresses): TextOpsSpec pins
-    * `curated ≡ curatedWindowReference` and `BenchExtra curated` A/Bs
-    * the two — ONE copy so the reference cannot drift from itself
-    * (review r9). Not a production path: the window buffers whole dup
-    * groups with text in one task (see [[curated]]'s scaladoc).
+    * `curated ≡ curatedWindowReference`; the window-vs-agg A/B that chose
+    * the agg form is recorded in OPTIMIZATION_r09.md. Not a production
+    * path: the window buffers whole dup groups with text in one task
+    * (see [[curated]]'s scaladoc).
     */
   private[graft] def curatedWindowReference(docs: DataFrame, lang: String = "en",
       minTokens: Int = 20, maxTokens: Int = 100000,

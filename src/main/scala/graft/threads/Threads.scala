@@ -141,7 +141,7 @@ object Threads {
     * SketchAccuracySpec.
     * DELIBERATELY NOT size-ratio prefiltered (VERDICT r5 item 1,
     * measured and refuted for THIS path): titles are near-uniform in
-    * size — FuzzyProfile at 1.06M distinct titles measured the lossless
+    * size — a stage profile at 1.06M distinct titles measured the lossless
     * bound removing only 0.40% of 4.07M candidates (failing pairs are
     * same-size different-token pairs). The bound earns its keep on
     * heavy-tailed DOCUMENT lengths instead — see Dedup.nearDupPairs;

@@ -4,10 +4,9 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkLi
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The listener-bus drain the measurement mains (Bench task skew,
-  * BenchExtra shuffle bytes) read their counters behind: after a drain,
-  * a listener has seen every task-end of the finished job — no fixed
-  * sleep, no late events.
+/** The listener-bus drain that Bench's task-skew counter reads behind:
+  * after a drain, a listener has seen every task-end of the finished
+  * job — no fixed sleep, no late events.
   */
 class ListenerBusSpec extends AnyFunSuite {
 

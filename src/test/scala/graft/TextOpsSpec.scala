@@ -405,7 +405,7 @@ class TextOpsSpec extends AnyFunSuite with GenChecks {
       TextOps.curated(df, lang = "en", minTokens = 3, maxTokens = 100,
         minStopHits = 1)
     // windowed reference (the shape the DuckDB oracle keeps) — the ONE
-    // shared copy BenchExtra's A/B also times (review r9)
+    // shared copy of the window form (review r9)
     val ref = TextOps.curatedWindowReference(docs, lang = "en",
       minTokens = 3, maxTokens = 100, minStopHits = 1)
       .as[Long].collect().toSet
