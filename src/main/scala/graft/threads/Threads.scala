@@ -204,12 +204,17 @@ object Threads {
     * glossary.rs:85-105, 246-278), top `limit` threads per bucket.
     * Per-bucket ranking uses a window (TakeOrdered per group), not a
     * global sort.
+    *
+    * Both bucket keys of a thread come from ONE scan of `threadsDf`
+    * (`explode(array(category, "any"))`). A self-union would plan the
+    * input twice, and since the `any` branch prunes `min(category)` the
+    * two aggregations differ, so AQE cannot reuse one exchange for the
+    * other: the salted two-phase aggregation would run twice.
     */
   def top(threadsDf: DataFrame, limit: Int = 10): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val withAny = threadsDf
-      .withColumn("category", when(col("category") === "", "other").otherwise(col("category")))
-      .unionByName(threadsDf.withColumn("category", lit("any")))
+    val withAny = threadsDf.withColumn("category", explode(array(
+      when(col("category") === "", "other").otherwise(col("category")), lit("any"))))
     val w = Window.partitionBy(col("category"))
       .orderBy(col("size").desc, col("title_norm"))
     withAny

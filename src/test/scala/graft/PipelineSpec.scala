@@ -174,16 +174,17 @@ class PipelineSpec extends AnyFunSuite {
   test("steady-state classify scans the corpus exactly ONCE across many actions") {
     import spark.implicits._
     // VERDICT r2 item 1's done-criterion on the production path: the
-    // CLI's persisted steady state (cli.Main.classifySteadyState). The
+    // CLI's steady state (cli.Main.classifySteadyState). The
     // accumulator counts every corpus row that crosses the extraction
     // input — the IDF pass, the classify pass, and THREE downstream
     // actions (count, threads, fuzzy threads) must all feed from the
-    // persisted caches, not re-extract.
+    // persisted extraction, not re-extract.
     val nDocs = 600L
     val acc = spark.sparkContext.longAccumulator("corpus_rows_scanned")
     val docs = Synth.corpus(spark, seed, nDocs)
       .mapPartitions { it => it.map { d => acc.add(1); d } }
-    val (classified, release, _) = graft.cli.Main.classifySteadyState(spark, docs, Map.empty)
+    val (classified, release, _) =
+      graft.cli.Main.classifySteadyState(spark, docs, Map.empty, rereads = false)
     try {
       val nKept = classified.count()
       Threads.threads(classified).count()
@@ -205,7 +206,8 @@ class PipelineSpec extends AnyFunSuite {
     val acc = spark.sparkContext.longAccumulator("corpus_rows_scanned_fused")
     val docs = Synth.corpus(spark, seed, nDocs)
       .mapPartitions { it => it.map { d => acc.add(1); d } }
-    val (classified, release, _) = graft.cli.Main.classifySteadyState(spark, docs, Map.empty)
+    val (classified, release, _) =
+      graft.cli.Main.classifySteadyState(spark, docs, Map.empty, rereads = false)
     try {
       val th = Threads.threads(classified)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)

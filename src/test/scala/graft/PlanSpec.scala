@@ -166,6 +166,28 @@ class PlanSpec extends AnyFunSuite {
     }
   }
 
+  test("top ranks from one scan of the thread table: no Union, one phase-1 exchange") {
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.UnionExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
+    val classified = Graft(spark).classify(graft.synth.Synth.corpus(spark, 42L, 400L))
+    val top = graft.threads.Threads.top(graft.threads.Threads.threads(classified))
+    top.collect() // the executed plan below is AQE's final plan
+    val plan = top.queryExecution.executedPlan
+    val aqe = new AdaptiveSparkPlanHelper {}
+    assert(aqe.collect(plan) { case u: UnionExec => u }.isEmpty, plan.toString)
+    // phase 1 of the salted aggregation shuffles by (title_norm, salt)
+    val phase1 = aqe.collect(plan) {
+      case e: ShuffleExchangeExec if (e.outputPartitioning match {
+        case h: HashPartitioning => h.references.exists(_.name == "salt")
+        case _                   => false
+      }) => e
+    }
+    assert(phase1.size == 1, plan.toString)
+    assert(aqe.collect(plan) { case r: ReusedExchangeExec => r }.isEmpty, plan.toString)
+  }
+
   test("ext_* queries consume the persisted classified cache (steady state)") {
     // VERDICT r2 item 1 regression net: the amortized architecture must be
     // visible in the PLAN — after classifiedFor builds the per-(session,

@@ -1,0 +1,167 @@
+package graft
+
+import graft.extract.TitleKey
+import graft.gloss.Classify
+import graft.synth.Synth
+import graft.threads.Threads
+import org.apache.spark.scheduler.{SparkListener, SparkListenerBlockUpdated, SparkListenerJobStart, SparkListenerStageSubmitted}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
+import org.scalatest.funsuite.AnyFunSuite
+
+/** `top`'s Spark shape: the one-scan ranking and the one-job DF counter
+  * against their former forms, and the verb's job count and cache set.
+  */
+class TopJobsSpec extends AnyFunSuite {
+
+  lazy val spark: SparkSession = SparkSession.builder()
+    .master("local[4]")
+    .config("spark.sql.shuffle.partitions", "4")
+    .config("spark.sql.adaptive.enabled", "true")
+    .config("spark.ui.enabled", "false")
+    .config("spark.sql.session.timeZone", "UTC")
+    .getOrCreate()
+
+  /** The former `Threads.top`: the thread table unioned with itself, one
+    * copy keyed by category and one by "any".
+    */
+  private def topByUnion(threadsDf: DataFrame, limit: Int): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val withAny = threadsDf
+      .withColumn("category", when(col("category") === "", "other").otherwise(col("category")))
+      .unionByName(threadsDf.withColumn("category", lit("any")))
+    val w = Window.partitionBy(col("category"))
+      .orderBy(col("size").desc, col("title_norm"))
+    withAny
+      .withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= limit)
+      .select("category", "rank", "title_norm", "size", "articles")
+  }
+
+  /** Rows as a multiset: row → multiplicity. */
+  private def bag(df: DataFrame): Map[(String, Int, String, Long, Seq[String]), Int] =
+    df.collect().toSeq.map { r =>
+      (r.getString(0), r.getInt(1), r.getString(2), r.getLong(3), r.getSeq[String](4).toList: Seq[String])
+    }.groupBy(identity).map { case (k, v) => k -> v.size }
+
+  test("top: one-scan ranking ≡ the self-union form (blank category, ties, limits)") {
+    import spark.implicits._
+    // (title_norm, size, articles, category), the thread table's columns
+    val rows =
+      // "" → "other"; three-way size tie broken by title_norm
+      Seq(("t-c", 5L, Seq("c1", "c2"), ""), ("t-a", 5L, Seq("a1"), ""),
+        ("t-b", 5L, Seq("b1"), ""), ("t-d", 2L, Seq("d1"), "")) ++
+      // a bucket larger than the default limit of 10
+      (0 until 14).map(i => (f"s-$i%02d", (20 - i / 3).toLong, Seq(s"s$i"), "sports")) ++
+      // a one-thread bucket, and a tie that crosses buckets in "any"
+      Seq(("e-x", 5L, Seq("e1"), "economy"), ("n-y", 3L, Seq("n1"), null))
+    val th = rows.toDF("title_norm", "size", "articles", "category").repartition(3)
+    Seq(1, 2, 10, 100).foreach { limit =>
+      val got = bag(Threads.top(th, limit))
+      assert(got == bag(topByUnion(th, limit)), s"limit $limit")
+      assert(got.keys.exists(_._1 == "other") && !got.keys.exists(_._1 == ""))
+    }
+    // limit larger than every bucket: every thread once per bucket
+    assert(bag(Threads.top(th, 100)).values.sum == 2 * rows.size)
+    // ties broken by title_norm ascending
+    val other = Threads.top(th, 3).filter($"category" === "other")
+      .select($"rank", $"title_norm").as[(Int, String)].collect().sortBy(_._1).map(_._2)
+    assert(other.toSeq == Seq("t-a", "t-b", "t-c"))
+    // the same on threads clustered from the synth corpus
+    val synthTh = Threads.threads(Graft(spark).classify(Synth.corpus(spark, 7L, 2000L)))
+      .persist()
+    try Seq(1, 3, 10).foreach { limit =>
+      assert(bag(Threads.top(synthTh, limit)) == bag(topByUnion(synthTh, limit)), s"synth limit $limit")
+    } finally synthTh.unpersist()
+  }
+
+  /** The former DF counter: a typed `groupByKey(identity).count()` over
+    * (sentinel, distinct vocabulary tokens) per title.
+    */
+  private def dfCountsByShuffle(df: DataFrame, dicts: Classify.Dicts): Map[String, Long] = {
+    import spark.implicits._
+    val vocab = new java.util.HashSet[String]()
+    dicts.themes.vocabulary.foreach(vocab.add)
+    dicts.entities.vocabulary.foreach(vocab.add)
+    val bcV = spark.sparkContext.broadcast(vocab)
+    df.select($"title_norm").as[String]
+      .mapPartitions { it =>
+        val v = bcV.value
+        it.flatMap { title =>
+          val toks = TitleKey.tokens(title).distinct.filter(v.contains)
+          Iterator.single(Classify.DocSentinel) ++ toks.iterator
+        }
+      }
+      .groupByKey(identity).count()
+      .collect().toMap
+  }
+
+  test("dfCounts ≡ the groupByKey shuffle form at 1, 4 and 64 partitions, nulls and empty") {
+    import spark.implicits._
+    val dicts = Classify.dictsBroadcast(spark).value
+    val titles = graft.extract.ExtractTitleExpr.run(Synth.corpus(spark, 42L, 3000L).toDF())
+      .select($"title_norm")
+      .union(Seq(null: String).toDF("title_norm"))
+      .persist()
+    try Seq(1, 4, 64).foreach { p =>
+      val df = titles.repartition(p)
+      assert(df.rdd.getNumPartitions == p)
+      val got = Classify.dfCounts(df, dicts)
+      assert(got.map(_._1).distinct.length == got.length, s"p=$p: duplicate tokens")
+      val want = dfCountsByShuffle(df, dicts)
+      assert(got.toMap == want, s"p=$p")
+      // the null row counts towards N (the 3000-doc synth keeps fewer)
+      assert(Classify.idfFromCounts(got).nDocs == titles.count())
+      assert(got.length > 100, s"p=$p: vocabulary barely hit")
+    } finally titles.unpersist()
+    val empty = spark.emptyDataset[String].toDF("title_norm")
+    assert(Classify.dfCounts(empty, dicts).isEmpty) // no sentinel row
+    assert(dfCountsByShuffle(empty, dicts).isEmpty)
+    assert(Classify.idfFromCounts(Classify.dfCounts(empty, dicts)).nDocs == 0L)
+    assert(Classify.computeIdf(empty, dicts).nDocs == 0L)
+  }
+
+  test("top without --out runs in 5 Spark jobs and caches only the extraction") {
+    val sc = spark.sparkContext
+    val group = "top-job-count"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val cachedRdds = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val rddNames = new java.util.concurrent.ConcurrentHashMap[Int, String]()
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        if (js.properties != null && js.properties.getProperty("spark.jobGroup.id") == group)
+          jobs.incrementAndGet()
+      override def onStageSubmitted(ss: SparkListenerStageSubmitted): Unit =
+        ss.stageInfo.rddInfos.foreach(i => rddNames.put(i.id, i.name))
+      override def onBlockUpdated(bu: SparkListenerBlockUpdated): Unit =
+        bu.blockUpdatedInfo.blockId match {
+          case org.apache.spark.storage.RDDBlockId(rdd, _) if bu.blockUpdatedInfo.storageLevel.isValid =>
+            cachedRdds.add(rdd)
+          case _ =>
+        }
+    }
+    // warm the session-memoized dictionary broadcast outside the count
+    Classify.dictsBroadcast(spark)
+    org.apache.spark.GraftListenerBus.drain(sc)
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "top job count")
+    val buf = new java.io.ByteArrayOutputStream()
+    try {
+      Console.withOut(new java.io.PrintStream(buf, true, "UTF-8")) {
+        graft.cli.Main.run(spark, "top", Map("synth" -> "2000"))
+      }
+      org.apache.spark.GraftListenerBus.drain(sc)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    assert(buf.toString("UTF-8").contains("\"category\": \"any\""))
+    // one job each: IDF (which also builds the extraction cache), salted
+    // phase 1, phase 2, the category exchange's stage, the result
+    val names = cachedRdds.toArray.map(id => rddNames.getOrDefault(id.asInstanceOf[Int], "?"))
+    assert(jobs.get == 5, s"Spark jobs per top: ${jobs.get}; cached: ${names.mkString(" | ")}")
+    assert(cachedRdds.size == 1, s"cached RDDs: ${names.mkString(" | ")}")
+    assert(names.head.contains("extract_title") && !names.head.contains("classify_title"),
+      names.head)
+  }
+}
