@@ -13,8 +13,8 @@ import org.apache.spark.sql.functions._
   *
   * {{{
   *   Main languages|news|categories|threads|top
-  *        [--input <parquet dir with (doc_id, spans)>] [--synth <nDocs>]
-  *        [--out <table dir>] [--buckets <n>]
+  *        [--input <parquet dir with (doc_id, spans)> | --htmldir <dir>
+  *         | --synth <nDocs>] [--out <table dir>] [--buckets <n>]
   * }}}
   *
   * With --out, results are written as a checkpointed table (resumable,
@@ -22,7 +22,13 @@ import org.apache.spark.sql.functions._
   * printed to stdout mirror the reference's printers (src/printer.rs:6-62,
   * src/nlu/glossary.rs:218-278) from a driver-side collect CAPPED at
   * `MaxCliRows` — the stdout path is a CLI-compat shim, the table write is
-  * the real sink (SURVEY.md §1.3 S4).
+  * the real sink (SURVEY.md §1.3 S4). `languages`, `news` and
+  * `categories` print the `MaxCliRows` smallest ids of each frame
+  * ([[smallestIdsByKey]], one exchange-free job), so a capped frame does
+  * not depend on the partitioning. `languages --htmldir <dir> --out <table>
+  * --buckets 4` runs 7 Spark jobs: the stdout ids (which also build the
+  * extraction cache), the staging write's rebalance map and its write,
+  * and one write per commit unit (LanguagesJobsSpec).
   */
 object Main {
 
@@ -135,6 +141,38 @@ object Main {
       case (_, Some(dir)) => graft.sources.HtmlDirSource.read(spark, dir) // the reference's `tgnews <verb> <dir>` shape
       case _ => Synth.corpus(spark, 42L, longOpt(opts, "synth", 1000L))
     }
+  }
+
+  /** Per key, the `cap` smallest ids in ascending order — exactly
+    * `ids.sorted.take(cap)` per key, duplicates kept — from a frame whose
+    * two string columns are (key, id). This is the stdout cap: whatever
+    * the partitioning, a key with more than `cap` ids prints the same
+    * ids. ONE Spark job with no SQL exchange: each partition keeps a
+    * max-heap of at most `cap` ids per key, and the partials merge through
+    * `treeAggregate` as in [[Classify.dfCounts]], so no key's ids are
+    * ever held whole. When the frame reads a persisted Dataset whose
+    * cache is not built yet, this job builds it.
+    */
+  private[graft] def smallestIdsByKey(pairs: org.apache.spark.sql.DataFrame,
+                                      cap: Int): Map[String, Array[String]] = {
+    require(cap > 0, s"cap must be positive, got $cap")
+    type Heaps = scala.collection.mutable.HashMap[String, java.util.PriorityQueue[String]]
+    def add(m: Heaps, key: String, id: String): Heaps = {
+      val heap = m.getOrElseUpdate(key,
+        new java.util.PriorityQueue[String](java.util.Collections.reverseOrder[String]()))
+      if (heap.size < cap) heap.add(id)
+      else if (id < heap.peek) { heap.poll(); heap.add(id) }
+      m
+    }
+    val spark = pairs.sparkSession
+    import spark.implicits._
+    val rdd = pairs.as[(String, String)].rdd
+    rdd.treeAggregate(new Heaps)(
+      (m, kv) => add(m, kv._1, kv._2),
+      (a, b) => { b.foreachEntry((k, heap) => heap.forEach(id => add(a, k, id))); a },
+      Classify.treeDepth(rdd.getNumPartitions))
+      .map { case (k, heap) => k -> heap.toArray(Array.empty[String]).sorted }
+      .toMap
   }
 
   private def jsonStr(s: String): String =
@@ -297,14 +335,13 @@ object Main {
         // try/finally: a DriftError from writeOut's audit must still
         // release the extraction cache (r6 review #2)
         try {
+          // the stdout ids come first: their exchange-free job also builds
+          // the extraction cache, which the table write then reads
+          val byLang = smallestIdsByKey(extracted.select($"lang", $"doc_id"), MaxCliRows)
           writeOut(extracted
             .select(col("doc_id"), col("lang"), col("title_norm"), col("spans")),
             "doc_id", identity)
           // {"lang_code": "en", "articles": [...]}, then ru — printer.rs:6-62
-          val byLang = extracted.select($"lang", $"doc_id")
-            .as[(String, String)].groupByKey(_._1)
-            .mapGroups((l, it) => (l, it.map(_._2).take(MaxCliRows).toArray.sorted))
-            .collect().toMap
           val frames = Seq("en", "ru").map { l =>
             s"""{"lang_code": ${jsonStr(l)}, "articles": [${byLang.getOrElse(l, Array.empty[String]).map(jsonStr).mkString(", ")}]}"""
           }
@@ -324,15 +361,16 @@ object Main {
               col("category"), col("is_news")),
             "doc_id", identity)
           commitIdf() // sidecar only after the audit + table write stood
+          val rows = classified.toDF()
           if (verb == "news") {
-            val ids = classified.filter(_.is_news).map(_.doc_id)
-              .take(MaxCliRows).sorted
+            val ids = smallestIdsByKey(
+              rows.filter(col("is_news")).select(lit(""), col("doc_id")), MaxCliRows)
+              .getOrElse("", Array.empty[String])
             println(s"""{"articles": [${ids.map(jsonStr).mkString(", ")}]}""")
           } else {
-            val cats = classified.filter(_.category.nonEmpty)
-              .groupByKey(_.category)
-              .mapGroups((c, it) => (c, it.map(_.doc_id).take(MaxCliRows).toArray.sorted))
-              .collect().sortBy(_._1)
+            val cats = smallestIdsByKey(
+              rows.filter(col("category") =!= "").select(col("category"), col("doc_id")),
+              MaxCliRows).toSeq.sortBy(_._1)
             val frames = cats.map { case (c, ids) =>
               s"""{"category": ${jsonStr(c)}, "articles": [${ids.map(jsonStr).mkString(", ")}]}"""
             }

@@ -97,6 +97,16 @@ object Classify {
   /** Partial maps merged per `treeAggregate` level in [[dfCounts]]. */
   private val TreeFanIn = 8
 
+  /** The `treeAggregate` depth that merges at most [[TreeFanIn]] partial
+    * results per level over `partitions` partitions: 1 (no shuffle, the
+    * driver merges) up to [[TreeFanIn]] partitions.
+    */
+  private[graft] def treeDepth(partitions: Int): Int = {
+    var depth = 1
+    while (math.pow(TreeFanIn.toDouble, depth.toDouble) < partitions) depth += 1
+    depth
+  }
+
   /** Document frequency of dictionary tokens over the `title_norm`
     * column of `df` (any extraction output qualifies), with corpus size
     * N carried on the [[DocSentinel]] entry: ≤ |dictionary vocabulary|+1
@@ -124,8 +134,6 @@ object Classify {
     dicts.entities.vocabulary.foreach(vocab.add)
     val bcV = spark.sparkContext.broadcast(vocab)
     val titles = df.select($"title_norm").as[String].rdd
-    var depth = 1
-    while (math.pow(TreeFanIn.toDouble, depth.toDouble) < titles.getNumPartitions) depth += 1
     val counts = titles.treeAggregate(scala.collection.mutable.HashMap.empty[String, Long])(
       (m, title) => {
         val v = bcV.value
@@ -136,7 +144,7 @@ object Classify {
         m
       },
       (a, b) => { b.foreachEntry((k, c) => a(k) = a.getOrElse(k, 0L) + c); a },
-      depth)
+      treeDepth(titles.getNumPartitions))
     bcV.destroy()
     counts.toArray
   }

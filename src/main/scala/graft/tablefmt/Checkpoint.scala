@@ -1,7 +1,9 @@
 package graft.tablefmt
 
 import com.fasterxml.jackson.databind.ObjectMapper
-import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoder, Encoders, Observation, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.util.concurrent.{Callable, Executors}
@@ -164,9 +166,15 @@ object Checkpoint {
     * bucket stages as about one file per advisory-size chunk instead of
     * one file per input partition (the file count follows the data size,
     * not the input's partitioning). The per-unit lineage fingerprints
-    * come from ONE two-column pass over the staged keys; each unit's
-    * `n_output` comes from an observation on its own write job, so no
-    * unit reads its output back. A fresh N-bucket
+    * (`n_input`, `input_fingerprint`) come from an observation on the
+    * staging write itself: a per-bucket aggregate with an O(buckets)
+    * buffer, placed after the rebalance so it runs in the write's result
+    * stage. No pass re-reads the staged keys; only a plan folded to an
+    * empty relation, which reports no metrics, recounts them. With
+    * `inputPrePartitioned` the one pass over the declared layout stays,
+    * since it also validates the layout. Each unit's `n_output` comes
+    * from an observation on its own write job, so no unit reads its
+    * output back either. A fresh N-bucket
     * run therefore scans the input exactly once (ResumeSpec asserts this
     * with an input-side accumulator); the previous form filtered the
     * un-staged input on the DERIVED bucket column per unit — no pruning
@@ -226,14 +234,16 @@ object Checkpoint {
       return WriteReport(planned, done.toSeq.sorted, Nil)
     }
 
-    val staged = if (inputPrePartitioned) {
+    // per-unit lineage fingerprints: bucket -> (rows, XOR of key hashes —
+    // order/partition independent, overflow-free)
+    val (staged, fps): (DataFrame, Map[Int, (Long, Long)]) = if (inputPrePartitioned) {
       // declared layout: the input IS the staging — serve pruned
       // per-unit reads straight from it, write no `_staged` copy.
       // Filter NOT-in-done rather than in-planned: when the declaration
       // is correct the two are identical (same partitions pruned), but a
       // MIS-declared layout (e.g. bucketed with a different `buckets`)
       // surfaces its out-of-range part_bucket values in the fingerprint
-      // pass below, where they fail loudly instead of being silently
+      // pass, where they fail loudly instead of being silently
       // filtered out of the committed table forever.
       require(input.columns.contains("part_bucket"),
         "inputPrePartitioned=true requires a part_bucket column " +
@@ -241,18 +251,34 @@ object Checkpoint {
       // NULL part_bucket rows (e.g. a __HIVE_DEFAULT_PARTITION__ dir)
       // are kept IN so the fingerprint pass can reject them loudly — a
       // bare `!isin(done)` is NULL for them, silently dropping the rows
-      if (done.isEmpty) input
-      else input.filter(col("part_bucket").isNull ||
-        !col("part_bucket").isin(done.toSeq: _*))
+      val pre =
+        if (done.isEmpty) input
+        else input.filter(col("part_bucket").isNull ||
+          !col("part_bucket").isin(done.toSeq: _*))
+      // the declared layout is not ours: one pass over it both
+      // fingerprints the units and checks its bucket values
+      val fps = fingerprintPass(pre, keyCol)
+      val badBuckets = fps.keys.filter(k => k < 0 || k >= buckets)
+      if (badBuckets.nonEmpty)
+        throw new IllegalArgumentException(
+          s"input part_bucket values ${badBuckets.toSeq.sorted.take(5).mkString(",")}… " +
+            s"outside [0, $buckets) — the pre-partitioned layout does not match " +
+            s"buckets=$buckets (rows would be silently dropped)")
+      (pre, fps)
     } else {
       // stage the uncommitted slices: the ONE full input scan of this
       // call. Clear any previous staging FIRST — a bucket that became
       // empty in the current input must not keep a stale directory from
       // a crashed run and commit rows that no longer exist.
       deleteRecursively(Paths.get(stagedDir))
+      val observed = Observation()
       input.withColumn("part_bucket", bucketOf(keyCol, buckets))
         .filter(col("part_bucket").isin(planned: _*))
         .hint("rebalance", col("part_bucket"))
+        // after the exchange: the metric is computed in the write's
+        // result stage, whose task updates Spark applies once
+        .observe(observed, unitFingerprints(buckets)(
+          col("part_bucket"), xxhash64(col(keyCol))).as("fp"))
         .write.mode(SaveMode.Overwrite)
         .partitionBy("part_bucket")
         .parquet(stagedDir)
@@ -261,30 +287,18 @@ object Checkpoint {
       val stagedSchema = org.apache.spark.sql.types.StructType(
         input.schema.fields :+ org.apache.spark.sql.types.StructField(
           "part_bucket", org.apache.spark.sql.types.IntegerType))
-      spark.read.schema(stagedSchema).parquet(stagedDir)
+      val staged = spark.read.schema(stagedSchema).parquet(stagedDir)
+      val metrics = Await.result(observed.future, ObservationTimeout)
+      // a plan the optimizer folded to an empty relation reports no
+      // metrics (an empty row): recount the staged slices instead
+      val fps =
+        if (metrics.length == 0) fingerprintPass(staged, keyCol)
+        else {
+          val acc = metrics.getSeq[Long](0)
+          planned.map(k => k -> ((acc(2 * k), acc(2 * k + 1)))).toMap
+        }
+      (staged, fps)
     }
-
-    // per-unit lineage fingerprints (XOR of key hashes — order/partition
-    // independent, overflow-free) + counts: one keyCol-only columnar pass
-    // over the staged slices, collected to O(buckets) driver rows
-    val fpRows = staged
-      .groupBy(col("part_bucket"))
-      .agg(count(lit(1)).as("n"),
-        coalesce(bit_xor(xxhash64(col(keyCol))), lit(0L)).as("fpxor"))
-      .collect()
-    if (fpRows.exists(_.isNullAt(0)))
-      throw new IllegalArgumentException(
-        "input contains NULL part_bucket values (e.g. a " +
-          "__HIVE_DEFAULT_PARTITION__ directory) — the pre-partitioned " +
-          "layout is invalid (rows would be silently dropped)")
-    val fps: Map[Int, (Long, Long)] =
-      fpRows.map(r => r.getInt(0) -> ((r.getLong(1), r.getLong(2)))).toMap
-    val badBuckets = fps.keys.filter(k => k < 0 || k >= buckets)
-    if (badBuckets.nonEmpty)
-      throw new IllegalArgumentException(
-        s"input part_bucket values ${badBuckets.toSeq.sorted.take(5).mkString(",")}… " +
-          s"outside [0, $buckets) — the pre-partitioned layout does not match " +
-          s"buckets=$buckets (rows would be silently dropped)")
 
     def runUnit(k: Int): Int = {
       if (failAtUnit.contains(k))
@@ -328,6 +342,52 @@ object Checkpoint {
 
   private val ObservationTimeout = 5.minutes
 
+  /** bucket -> (rows, XOR of key hashes) over `df`'s `part_bucket`
+    * column: one keyCol-only columnar pass collected to O(buckets) driver
+    * rows. A NULL bucket (only a declared layout can hold one) fails.
+    */
+  private def fingerprintPass(df: DataFrame, keyCol: String): Map[Int, (Long, Long)] = {
+    val rows = df.groupBy(col("part_bucket"))
+      .agg(count(lit(1)), coalesce(bit_xor(xxhash64(col(keyCol))), lit(0L)))
+      .collect()
+    if (rows.exists(_.isNullAt(0)))
+      throw new IllegalArgumentException(
+        "input contains NULL part_bucket values (e.g. a " +
+          "__HIVE_DEFAULT_PARTITION__ directory) — the pre-partitioned " +
+          "layout is invalid (rows would be silently dropped)")
+    rows.map(r => r.getInt(0) -> ((r.getLong(1), r.getLong(2)))).toMap
+  }
+
+  /** (bucket, key hash) -> one array holding (rows, XOR of key hashes) at
+    * indices (2k, 2k+1) for every bucket k in [0, buckets): the staging
+    * write's [[fingerprintPass]], as an aggregate an Observation can
+    * carry. The buffer is O(buckets) whatever the row count.
+    */
+  private final class UnitFingerprints(buckets: Int)
+      extends Aggregator[(Int, Long), Array[Long], Array[Long]] {
+    def zero: Array[Long] = new Array[Long](2 * buckets)
+    def reduce(acc: Array[Long], row: (Int, Long)): Array[Long] = {
+      acc(2 * row._1) += 1L
+      acc(2 * row._1 + 1) ^= row._2
+      acc
+    }
+    def merge(a: Array[Long], b: Array[Long]): Array[Long] = {
+      var k = 0
+      while (k < buckets) {
+        a(2 * k) += b(2 * k)
+        a(2 * k + 1) ^= b(2 * k + 1)
+        k += 1
+      }
+      a
+    }
+    def finish(acc: Array[Long]): Array[Long] = acc
+    def bufferEncoder: Encoder[Array[Long]] = ExpressionEncoder[Array[Long]]()
+    def outputEncoder: Encoder[Array[Long]] = ExpressionEncoder[Array[Long]]()
+  }
+
+  private def unitFingerprints(buckets: Int) =
+    udaf(new UnitFingerprints(buckets), Encoders.tuple(Encoders.scalaInt, Encoders.scalaLong))
+
   /** Runs `unit` over `ks` on `parallelism` pool threads. The threads are
     * created by the calling thread, so they inherit its Spark local
     * properties (job group, scheduler pool) and unit jobs count towards
@@ -362,14 +422,9 @@ object Checkpoint {
     requireSameKeying(out, keyCol)
     val manifests = readManifests(out).map(m => m.bucket -> m).toMap
     if (manifests.isEmpty) return Seq.empty
-    val current = input
+    val current = fingerprintPass(input
       .withColumn("part_bucket", bucketOf(keyCol, buckets))
-      .filter(col("part_bucket").isin(manifests.keys.toSeq: _*))
-      .groupBy(col("part_bucket"))
-      .agg(count(lit(1)).as("n"),
-        coalesce(bit_xor(xxhash64(col(keyCol))), lit(0L)).as("fpxor"))
-      .collect()
-      .map(r => r.getInt(0) -> ((r.getLong(1), r.getLong(2)))).toMap
+      .filter(col("part_bucket").isin(manifests.keys.toSeq: _*)), keyCol)
     manifests.collect {
       // a bucket absent from the groupBy means its input slice is now
       // empty — compare as (0, 0), not "always drifted" (Option.forall

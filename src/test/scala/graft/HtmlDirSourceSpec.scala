@@ -38,6 +38,25 @@ class HtmlDirSourceSpec extends AnyFunSuite {
     assert(bare.length == 1 && bare.head.lang == "en")
   }
 
+  test("200 tiny files read in at most defaultParallelism partitions, same Docs") {
+    val root = Files.createTempDirectory("htmldir_tiny")
+    (0 until 200).foreach { i =>
+      val sub = Files.createDirectories(root.resolve(f"d${i % 5}"))
+      Files.writeString(sub.resolve(s"f$i.html"), s"<html><body><h1>title number $i</h1></body></html>")
+    }
+    val docs = HtmlDirSource.read(spark, root.toString)
+    assert(docs.rdd.getNumPartitions <= spark.sparkContext.defaultParallelism)
+    // the scan as Spark splits it, one partition per 32 files here
+    val uncoalesced = spark.read.format("binaryFile").option("recursiveFileLookup", "true")
+      .load(root.toString).select("path", "content")
+    assert(uncoalesced.rdd.getNumPartitions > spark.sparkContext.defaultParallelism)
+    def bag(rows: Seq[(String, String)]) = rows.groupBy(identity).map { case (k, v) => k -> v.size }
+    val got = docs.collect().toSeq.map(d => d.doc_id -> d.spans.map(s => s"${s.kind}|${s.text}|${s.offset}").mkString)
+    val want = uncoalesced.collect().toSeq.map(r =>
+      r.getString(0) -> s"html|${new String(r.getAs[Array[Byte]](1), "UTF-8")}|0")
+    assert(got.size == 200 && bag(got) == bag(want))
+  }
+
   test("extraction over the html dir keeps en/ru, drops no-h1") {
     val root = Files.createTempDirectory("htmldir2")
     Files.writeString(root.resolve("a.html"),

@@ -346,6 +346,20 @@ class ResumeSpec extends AnyFunSuite {
     assert(Checkpoint.committedUnits(out) == Set(0, 1))
   }
 
+  test("a statically empty input stages and commits without waiting on the observation") {
+    import spark.implicits._
+    val empty = Seq.empty[(String, String)].toDF("doc_id", "text")
+    val out = Files.createTempDirectory("ckpt_static_empty").toString
+    val t0 = System.nanoTime()
+    val r = Checkpoint.resume(spark, empty, "doc_id", transform, out, buckets = 4)
+    val s = (System.nanoTime() - t0) / 1e9
+    assert(s < 60, s"resume over an empty LocalRelation took $s s")
+    assert(r.unitsCommitted == (0 until 4))
+    val ms = Checkpoint.readManifests(out)
+    assert(ms.forall(m => m.nInput == 0L && m.nOutput == 0L && m.inputFingerprint == 0L))
+    assert(Checkpoint.validateCommitted(spark, empty, "doc_id", out, 4).isEmpty)
+  }
+
   test("observed n_output equals a read-back count; lineage equals the audit's") {
     val half: DataFrame => DataFrame = df =>
       transform(df).filter(substring(col("doc_id"), -1, 1).cast("int") % 2 === 0)

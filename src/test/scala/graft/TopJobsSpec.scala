@@ -4,7 +4,6 @@ import graft.extract.TitleKey
 import graft.gloss.Classify
 import graft.synth.Synth
 import graft.threads.Threads
-import org.apache.spark.scheduler.{SparkListener, SparkListenerBlockUpdated, SparkListenerJobStart, SparkListenerStageSubmitted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -122,45 +121,17 @@ class TopJobsSpec extends AnyFunSuite {
   }
 
   test("top without --out runs in 5 Spark jobs and caches only the extraction") {
-    val sc = spark.sparkContext
-    val group = "top-job-count"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val cachedRdds = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-    val rddNames = new java.util.concurrent.ConcurrentHashMap[Int, String]()
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        if (js.properties != null && js.properties.getProperty("spark.jobGroup.id") == group)
-          jobs.incrementAndGet()
-      override def onStageSubmitted(ss: SparkListenerStageSubmitted): Unit =
-        ss.stageInfo.rddInfos.foreach(i => rddNames.put(i.id, i.name))
-      override def onBlockUpdated(bu: SparkListenerBlockUpdated): Unit =
-        bu.blockUpdatedInfo.blockId match {
-          case org.apache.spark.storage.RDDBlockId(rdd, _) if bu.blockUpdatedInfo.storageLevel.isValid =>
-            cachedRdds.add(rdd)
-          case _ =>
-        }
-    }
     // warm the session-memoized dictionary broadcast outside the count
     Classify.dictsBroadcast(spark)
-    org.apache.spark.GraftListenerBus.drain(sc)
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "top job count")
-    val buf = new java.io.ByteArrayOutputStream()
-    try {
-      Console.withOut(new java.io.PrintStream(buf, true, "UTF-8")) {
-        graft.cli.Main.run(spark, "top", Map("synth" -> "2000"))
-      }
-      org.apache.spark.GraftListenerBus.drain(sc)
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
+    val run = JobProbe(spark, "top-job-count") {
+      graft.cli.Main.run(spark, "top", Map("synth" -> "2000"))
     }
-    assert(buf.toString("UTF-8").contains("\"category\": \"any\""))
+    assert(run.stdout.contains("\"category\": \"any\""))
     // one job each: IDF (which also builds the extraction cache), salted
     // phase 1, phase 2, the category exchange's stage, the result
-    val names = cachedRdds.toArray.map(id => rddNames.getOrDefault(id.asInstanceOf[Int], "?"))
-    assert(jobs.get == 5, s"Spark jobs per top: ${jobs.get}; cached: ${names.mkString(" | ")}")
-    assert(cachedRdds.size == 1, s"cached RDDs: ${names.mkString(" | ")}")
+    val names = run.cachedRddNames
+    assert(run.jobs == 5, s"Spark jobs per top: ${run.jobs}; cached: ${names.mkString(" | ")}")
+    assert(names.size == 1, s"cached RDDs: ${names.mkString(" | ")}")
     assert(names.head.contains("extract_title") && !names.head.contains("classify_title"),
       names.head)
   }
