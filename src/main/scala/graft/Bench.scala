@@ -363,9 +363,9 @@ object ScalingBench {
     // PERSISTED thread table (threads feed both the thread listing and
     // top in one session; recomputing the salted agg per consumer was
     // pure recompute waste).
-    val (classified, release, _) =
-      cli.Main.classifySteadyState(spark, spark.read.parquet(dir).as[Doc], Map.empty,
-        rereads = false)
+    val (classified, release) =
+      cli.Main.classifySteadyState(spark, spark.read.parquet(dir).as[Doc],
+        persistClassified = false)
     val th = graft.threads.Threads.threads(classified)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     th.count() // one job: classify → salted thread agg → thread cache

@@ -28,7 +28,11 @@ import org.apache.spark.sql.functions._
   * not depend on the partitioning. `languages --htmldir <dir> --out <table>
   * --buckets 4` runs 7 Spark jobs: the stdout ids (which also build the
   * extraction cache), the staging write's rebalance map and its write,
-  * and one write per commit unit (LanguagesJobsSpec).
+  * and one write per commit unit (LanguagesJobsSpec). The classify verbs
+  * compute the corpus IDF on every run, `--out` or not; with
+  * `--synth 2000 --out <table> --buckets 4`, `categories` runs 9 jobs on a
+  * first run and 2 on a rerun into the same table, `top` 20 and 6
+  * (TopJobsSpec).
   */
 object Main {
 
@@ -182,20 +186,15 @@ object Main {
     } + "\""
 
   /** Steady-state classification for the classify-consuming verbs: the
-    * corpus is extracted ONCE (persisted, Tungsten byte path); with --out
-    * the token-DF table is written to `$out/_idf` on the first run and
-    * read back by every later run (resume included) — the reference's
-    * build-index-once flow (src/main.rs:89-95): steady-state
-    * classification is a single corpus scan, no per-job IDF recompute.
-    * Returns the classified Dataset (scored with the GLOBAL
-    * IDF — checkpointed sinks slice THESE rows rather than re-classifying
-    * per slice), a `release` thunk the verb calls when done, and a
-    * `commitIdf` thunk that persists the `$out/_idf` sidecar. The sidecar
-    * write is DEFERRED to commitIdf (called after the verb's checkpoint
-    * write, i.e. after the `--validate` drift audit had its chance to
-    * abort): a validate run that detects drift must leave `$out` fully
-    * untouched — the r6 review found the old shape overwriting `_idf`
-    * with the drifted corpus's IDF before the audit ran (r6 review #1).
+    * corpus is extracted ONCE (persisted, Tungsten byte path), the IDF is
+    * one job over that extraction ([[Classify.computeIdf]], which also
+    * builds the extraction cache), and every row is scored with that
+    * GLOBAL IDF. Like the reference, which builds its index once per
+    * process (src/main.rs:89-95), every run computes the IDF afresh;
+    * nothing of it is kept under `--out`, and an IDF table that an older
+    * build left there is ignored. Returns the classified Dataset
+    * (checkpointed sinks slice THESE rows rather than re-classifying per
+    * slice) and a `release` thunk the verb calls when done.
     * There is deliberately NO materializing count() here (VERDICT r4
     * item 1): the verb's first action — the checkpoint staging write or
     * the stdout aggregation — populates the classify cache as part of
@@ -204,25 +203,22 @@ object Main {
     * persisted (it backs any not-yet-computed classified partitions)
     * until `release`, which frees both.
     *
-    * The extraction is ALWAYS persisted: the IDF pass (whose one job
-    * builds that cache) and the classify pass both read it. `classified`
-    * is persisted only when the caller reads it more than once: with
-    * `--out` (table write plus stdout), with `--fuzzy true` (the fuzzy
-    * keying reads it twice) and when `rereads` is set (`debug`, which
-    * counts it before listing it). A plain `top`/`threads`/`news`/
+    * The extraction is ALWAYS persisted: the IDF pass and the classify
+    * pass both read it. `classified` is persisted only when
+    * `persistClassified` is set, which a caller does when it reads it
+    * more than once: with `--out` (table write plus stdout), with
+    * `--fuzzy true` (the fuzzy keying reads it twice) and in `debug`
+    * (which counts it before listing it). A plain `top`/`threads`/`news`/
     * `categories` reads it once, and a cache there only costs an extra
     * job and a columnar build of the entities map.
     *
     * This is the ONE classify steady state: the verbs, the
     * `ScalingBench` pipeline stage and PipelineSpec's one-scan tests all
-    * call it; the bench and the tests pass empty `opts` (no `--out`, so
-    * no `_idf` sidecar), the shape a plain `top` runs.
+    * call it.
     */
   private[graft] def classifySteadyState(spark: SparkSession, docs: Dataset[Doc],
-      opts: Map[String, String], rereads: Boolean)
-      : (Dataset[graft.model.ClassifiedDoc], () => Unit, () => Unit) = {
+      persistClassified: Boolean): (Dataset[graft.model.ClassifiedDoc], () => Unit) = {
     import org.apache.spark.storage.StorageLevel
-    import spark.implicits._
     // session-memoized dictionary broadcast (VERDICT r3 item 6)
     val bc = Classify.dictsBroadcast(spark)
     // classify-only extraction (ExtractTitleExpr): same kernel/gate as
@@ -231,49 +227,12 @@ object Main {
     // verb, which does need spans, runs the full expression itself.
     val extracted = graft.extract.ExtractTitleExpr.run(docs.toDF())
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val (idf, commitIdf): (graft.gloss.TokenIdf, () => Unit) = opts.get("out") match {
-      case Some(out) =>
-        val idfDir = s"$out/_idf"
-        val fpFile = java.nio.file.Paths.get(s"$out/_idf_fp")
-        // input fingerprint gates reuse: a persisted IDF from a DIFFERENT
-        // corpus must not silently score this one. The fingerprint runs on
-        // the (persisted) extracted cache — no extra corpus scan.
-        // coalesce: bit_xor aggregates to NULL on an empty extraction
-        // (e.g. every doc dropped by the language gate)
-        val fp = {
-          val r = extracted.agg(
-            count(lit(1)),
-            coalesce(bit_xor(xxhash64(col("doc_id"), col("title_norm"))), lit(0L))).head()
-          s"${r.getLong(0)}:${r.getLong(1)}"
-        }
-        val fresh = java.nio.file.Files.exists(fpFile) &&
-          java.nio.file.Files.readString(fpFile).trim == fp &&
-          new java.io.File(idfDir, "_SUCCESS").exists
-        if (fresh) (Classify.idfFromTable(spark.read.parquet(idfDir)), () => ())
-        else {
-          // collect the bounded count set now (≤ vocabulary+1 rows),
-          // persist it only when the verb commits — a death between the
-          // table write and this sidecar write is safe: the next run
-          // sees a stale fingerprint and recomputes the same IDF from
-          // the same corpus before resuming
-          val counts = Classify.dfCounts(extracted, bc.value)
-          (Classify.idfFromCounts(counts), () => {
-            counts.toSeq.toDF("token", "df")
-              .coalesce(1).write.mode("overwrite").parquet(idfDir)
-            java.nio.file.Files.writeString(fpFile, fp)
-            ()
-          })
-        }
-      case None => (Classify.computeIdf(extracted, bc.value), () => ())
-    }
-    val bcIdf = spark.sparkContext.broadcast(idf)
+    val bcIdf = spark.sparkContext.broadcast(Classify.computeIdf(extracted, bc.value))
     val scored = Classify.runWithIdfSlim(extracted, bc, bcIdf)
     val classified =
-      if (rereads || opts.contains("out") || opts.get("fuzzy").contains("true"))
-        scored.persist(StorageLevel.MEMORY_AND_DISK)
-      else scored
+      if (persistClassified) scored.persist(StorageLevel.MEMORY_AND_DISK) else scored
     // unpersist of a never-persisted Dataset is a no-op
-    (classified, () => { extracted.unpersist(); classified.unpersist(); () }, commitIdf)
+    (classified, () => { extracted.unpersist(); classified.unpersist(); () })
   }
 
   def run(spark: SparkSession, verb: String, opts: Map[String, String]): Unit = {
@@ -349,8 +308,8 @@ object Main {
         } finally extracted.unpersist()
 
       case "news" | "categories" =>
-        val (classified, release, commitIdf) =
-          classifySteadyState(spark, docs, opts, rereads = false)
+        val (classified, release) =
+          classifySteadyState(spark, docs, persistClassified = opts.contains("out"))
         // the table slices the PERSISTED classified rows (already scored
         // with the global IDF) — classification runs once, not once for
         // stdout plus once per commit unit. try/finally: a DriftError
@@ -360,7 +319,6 @@ object Main {
             .select(col("doc_id"), col("lang"), col("title_norm"),
               col("category"), col("is_news")),
             "doc_id", identity)
-          commitIdf() // sidecar only after the audit + table write stood
           val rows = classified.toDF()
           if (verb == "news") {
             val ids = smallestIdsByKey(
@@ -383,8 +341,8 @@ object Main {
         val t0 = System.nanoTime()
         val nInput = docs.count()
         val t1 = System.nanoTime()
-        val (classified, release, commitIdf) =
-          classifySteadyState(spark, docs, opts, rereads = true)
+        val (classified, release) =
+          classifySteadyState(spark, docs, persistClassified = true)
         try {
           val nKept = classified.count()
           val t2 = System.nanoTime()
@@ -400,12 +358,10 @@ object Main {
             s""""n_distinct_titles": $nTitles, "n_threads": $nThreads, """ +
             s""""scan_ms": ${ms(t0, t1)}, "extract_classify_ms": ${ms(t1, t2)}, """ +
             s""""threads_ms": ${ms(t2, t3)}}""")
-          // debug writes no table, but it DOES maintain the _idf sidecar —
-          // so under --validate it must run the same audit the writing
-          // verbs do before touching $out (r6 review #1: without this, a
-          // drifted `debug --validate --out` overwrote the sidecar and
-          // exited 0, leaving a later `top --validate` unable to see the
-          // drift in _idf). The audit keys by the table's RECORDED keying
+          // debug writes no table, but `debug --validate true --out <t>`
+          // is the read-only drift audit of an existing table: it exits 3
+          // on drift like the writing verbs and never touches $out. The
+          // audit keys by the table's RECORDED keying
           // (ADVICE r6: a fixed doc_id audit against a threads/top table
           // — keyed by title_norm or component — reported spurious drift):
           // doc_id and title_norm slices are reproducible from the
@@ -437,7 +393,6 @@ object Main {
                       "wrote the table (e.g. threads --fuzzy --validate true)")
               }
             }
-          commitIdf()
         } finally release()
 
       case "threads" | "top" =>
@@ -449,14 +404,15 @@ object Main {
         // commit units slice by it — stdout and the table now come from
         // the SAME clustering (VERDICT r3 item 3: the old sink silently
         // wrote exact-title threads under --fuzzy).
-        val (classified, release, commitIdf) =
-          classifySteadyState(spark, docs, opts, rereads = false)
+        val fuzzy = opts.get("fuzzy").contains("true")
+        val (classified, release) = classifySteadyState(spark, docs,
+          persistClassified = opts.contains("out") || fuzzy)
         var fuzzyKeyed: Option[org.apache.spark.sql.DataFrame] = None
         // try/finally: a DriftError from writeOut's audit must still
         // release the classify + fuzzy caches
         try {
           fuzzyKeyed =
-            if (opts.get("fuzzy").contains("true"))
+            if (fuzzy)
               Some(Threads.fuzzyKeyed(classified.toDF())
                 .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
             else None
@@ -469,7 +425,6 @@ object Main {
                 df => Threads.threads(df.as[graft.model.ClassifiedDoc]))
               Threads.threads(classified)
           }
-          commitIdf() // sidecar only after the audit + table write stood
           if (verb == "threads") {
             val rows = Threads.ranked(th)
               .select($"title_norm", $"articles")

@@ -53,8 +53,11 @@ object CategoryRules {
   *     ≤40k-entry maps) → broadcast. This reproduces the corpus-IDF
   *     gate the reference gets from tantivy BM25 — without it the real
   *     37.7k-word bert-dict over-fires on stopwords. [[dfTableSlim]] is
-  *     the persistable table view of the same counts, [[idfFromTable]]
-  *     reads it back.
+  *     the table view of the same counts and [[idfFromTable]] reads one
+  *     back; neither has a production caller (the CLI recomputes the IDF
+  *     on every run). They stay for perfbench's typed spec and
+  *     PipelineSpec's table round trip (CHANGES.md FOUND on
+  *     `dfTableSlim`).
   *  2. [[runWithIdfSlim]] — one Catalyst expression per row
   *     ([[ClassifyTitleExpr]]) with two broadcast matchers (themes +
   *     entity classes) + the broadcast IDF table. No other shuffle.
@@ -151,9 +154,8 @@ object Classify {
 
   /** [[dfCounts]] as a (token, df) table — a local relation over the
     * already-collected counts, so reading it back costs no further job.
-    * PERSISTABLE: write it once per corpus snapshot and feed every later
-    * classify job via [[idfFromTable]] — that amortizes the DF pass, so
-    * steady-state classification is back to ONE pass over the corpus.
+    * No production caller: perfbench's typed spec and PipelineSpec's
+    * persisted round trip read it back through [[idfFromTable]].
     */
   def dfTableSlim(df: org.apache.spark.sql.DataFrame, dicts: Dicts): org.apache.spark.sql.DataFrame = {
     import df.sparkSession.implicits._
@@ -168,10 +170,8 @@ object Classify {
     idfFromCounts(table.select($"token", $"df".cast("long")).as[(String, Long)].collect())
   }
 
-  /** [[idfFromTable]] over already-collected (token, df) rows — lets a
-    * caller hold the bounded count set (≤ vocabulary+1 rows) and decide
-    * separately when/whether to persist it (the CLI defers the `_idf`
-    * sidecar write until after the `--validate` drift audit).
+  /** [[idfFromTable]] over already-collected (token, df) rows, such as
+    * [[dfCounts]]'s bounded count set (≤ vocabulary+1 rows).
     */
   def idfFromCounts(counts: Array[(String, Long)]): TokenIdf = {
     val n = counts.collectFirst { case (DocSentinel, c) => c }.getOrElse(0L)
@@ -222,8 +222,7 @@ object Classify {
     )
   }
 
-  /** Classify with a PRE-COMPUTED idf ([[computeIdf]], or [[idfFromTable]]
-    * over a persisted [[dfTableSlim]]) — the one production classify
+  /** Classify with a PRE-COMPUTED idf ([[computeIdf]]) — the one production classify
     * path. Reads the (doc_id, lang, title_norm) columns of `df` BY NAME:
     * a reordered frame, or a full extraction with span columns, needs no
     * projection by the caller and is never misclassified through

@@ -170,11 +170,9 @@ object Checkpoint {
     * staging write itself: a per-bucket aggregate with an O(buckets)
     * buffer, placed after the rebalance so it runs in the write's result
     * stage. No pass re-reads the staged keys; only a plan folded to an
-    * empty relation, which reports no metrics, recounts them. With
-    * `inputPrePartitioned` the one pass over the declared layout stays,
-    * since it also validates the layout. Each unit's `n_output` comes
-    * from an observation on its own write job, so no unit reads its
-    * output back either. A fresh N-bucket
+    * empty relation, which reports no metrics, recounts them. Each unit's
+    * `n_output` comes from an observation on its own write job, so no
+    * unit reads its output back either. A fresh N-bucket
     * run therefore scans the input exactly once (ResumeSpec asserts this
     * with an input-side accumulator); the previous form filtered the
     * un-staged input on the DERIVED bucket column per unit — no pruning
@@ -205,24 +203,11 @@ object Checkpoint {
     *                        starts, and the in-flight ones finish before
     *                        the failure is rethrown, so nothing commits
     *                        after `resume` has thrown.
-    * @param inputPrePartitioned declare that `input` already carries a
-    *                        `part_bucket` column equal to
-    *                        `bucketOf(keyCol, buckets)` AND (for the
-    *                        pruning to be real) is backed by storage
-    *                        partitioned on it — e.g. a previous run's
-    *                        `$out/_staged`, or an extracted table written
-    *                        `partitionBy("part_bucket")`. Staging is then
-    *                        BYPASSED: per-unit reads prune the input
-    *                        directly, and no `_staged` copy is written
-    *                        (VERDICT r4 item 3 — saves the 1× staging
-    *                        write amplification when the layout already
-    *                        exists).
     */
   def resume(spark: SparkSession, input: DataFrame, keyCol: String,
              transform: DataFrame => DataFrame, out: String, buckets: Int,
              failAtUnit: Option[Int] = None,
-             unitParallelism: Int = 1,
-             inputPrePartitioned: Boolean = false): WriteReport = {
+             unitParallelism: Int = 1): WriteReport = {
     requireSameKeying(out, keyCol)
     val done = committedUnits(out)
     val planned = (0 until buckets).filterNot(done)
@@ -234,71 +219,39 @@ object Checkpoint {
       return WriteReport(planned, done.toSeq.sorted, Nil)
     }
 
+    // stage the uncommitted slices: the ONE full input scan of this call.
+    // Clear any previous staging FIRST — a bucket that became empty in the
+    // current input must not keep a stale directory from a crashed run
+    // and commit rows that no longer exist.
+    deleteRecursively(Paths.get(stagedDir))
+    val observed = Observation()
+    input.withColumn("part_bucket", bucketOf(keyCol, buckets))
+      .filter(col("part_bucket").isin(planned: _*))
+      .hint("rebalance", col("part_bucket"))
+      // after the exchange: the metric is computed in the write's result
+      // stage, whose task updates Spark applies once
+      .observe(observed, unitFingerprints(buckets)(
+        col("part_bucket"), xxhash64(col(keyCol))).as("fp"))
+      .write.mode(SaveMode.Overwrite)
+      .partitionBy("part_bucket")
+      .parquet(stagedDir)
+    // explicit schema: empty slices leave no files to infer from, and the
+    // partition column must come back as int, not inferred
+    val stagedSchema = org.apache.spark.sql.types.StructType(
+      input.schema.fields :+ org.apache.spark.sql.types.StructField(
+        "part_bucket", org.apache.spark.sql.types.IntegerType))
+    val staged = spark.read.schema(stagedSchema).parquet(stagedDir)
+    val metrics = Await.result(observed.future, ObservationTimeout)
     // per-unit lineage fingerprints: bucket -> (rows, XOR of key hashes —
-    // order/partition independent, overflow-free)
-    val (staged, fps): (DataFrame, Map[Int, (Long, Long)]) = if (inputPrePartitioned) {
-      // declared layout: the input IS the staging — serve pruned
-      // per-unit reads straight from it, write no `_staged` copy.
-      // Filter NOT-in-done rather than in-planned: when the declaration
-      // is correct the two are identical (same partitions pruned), but a
-      // MIS-declared layout (e.g. bucketed with a different `buckets`)
-      // surfaces its out-of-range part_bucket values in the fingerprint
-      // pass, where they fail loudly instead of being silently
-      // filtered out of the committed table forever.
-      require(input.columns.contains("part_bucket"),
-        "inputPrePartitioned=true requires a part_bucket column " +
-          s"(= Checkpoint.bucketOf($keyCol, $buckets))")
-      // NULL part_bucket rows (e.g. a __HIVE_DEFAULT_PARTITION__ dir)
-      // are kept IN so the fingerprint pass can reject them loudly — a
-      // bare `!isin(done)` is NULL for them, silently dropping the rows
-      val pre =
-        if (done.isEmpty) input
-        else input.filter(col("part_bucket").isNull ||
-          !col("part_bucket").isin(done.toSeq: _*))
-      // the declared layout is not ours: one pass over it both
-      // fingerprints the units and checks its bucket values
-      val fps = fingerprintPass(pre, keyCol)
-      val badBuckets = fps.keys.filter(k => k < 0 || k >= buckets)
-      if (badBuckets.nonEmpty)
-        throw new IllegalArgumentException(
-          s"input part_bucket values ${badBuckets.toSeq.sorted.take(5).mkString(",")}… " +
-            s"outside [0, $buckets) — the pre-partitioned layout does not match " +
-            s"buckets=$buckets (rows would be silently dropped)")
-      (pre, fps)
-    } else {
-      // stage the uncommitted slices: the ONE full input scan of this
-      // call. Clear any previous staging FIRST — a bucket that became
-      // empty in the current input must not keep a stale directory from
-      // a crashed run and commit rows that no longer exist.
-      deleteRecursively(Paths.get(stagedDir))
-      val observed = Observation()
-      input.withColumn("part_bucket", bucketOf(keyCol, buckets))
-        .filter(col("part_bucket").isin(planned: _*))
-        .hint("rebalance", col("part_bucket"))
-        // after the exchange: the metric is computed in the write's
-        // result stage, whose task updates Spark applies once
-        .observe(observed, unitFingerprints(buckets)(
-          col("part_bucket"), xxhash64(col(keyCol))).as("fp"))
-        .write.mode(SaveMode.Overwrite)
-        .partitionBy("part_bucket")
-        .parquet(stagedDir)
-      // explicit schema: empty slices leave no files to infer from, and
-      // the partition column must come back as int, not inferred
-      val stagedSchema = org.apache.spark.sql.types.StructType(
-        input.schema.fields :+ org.apache.spark.sql.types.StructField(
-          "part_bucket", org.apache.spark.sql.types.IntegerType))
-      val staged = spark.read.schema(stagedSchema).parquet(stagedDir)
-      val metrics = Await.result(observed.future, ObservationTimeout)
-      // a plan the optimizer folded to an empty relation reports no
-      // metrics (an empty row): recount the staged slices instead
-      val fps =
-        if (metrics.length == 0) fingerprintPass(staged, keyCol)
-        else {
-          val acc = metrics.getSeq[Long](0)
-          planned.map(k => k -> ((acc(2 * k), acc(2 * k + 1)))).toMap
-        }
-      (staged, fps)
-    }
+    // order/partition independent, overflow-free). A plan the optimizer
+    // folded to an empty relation reports no metrics (an empty row):
+    // recount the staged slices instead.
+    val fps: Map[Int, (Long, Long)] =
+      if (metrics.length == 0) fingerprintPass(staged, keyCol)
+      else {
+        val acc = metrics.getSeq[Long](0)
+        planned.map(k => k -> ((acc(2 * k), acc(2 * k + 1)))).toMap
+      }
 
     def runUnit(k: Int): Int = {
       if (failAtUnit.contains(k))
@@ -343,20 +296,14 @@ object Checkpoint {
   private val ObservationTimeout = 5.minutes
 
   /** bucket -> (rows, XOR of key hashes) over `df`'s `part_bucket`
-    * column: one keyCol-only columnar pass collected to O(buckets) driver
-    * rows. A NULL bucket (only a declared layout can hold one) fails.
+    * column (derived by [[bucketOf]], so never NULL): one keyCol-only
+    * columnar pass collected to O(buckets) driver rows.
     */
-  private def fingerprintPass(df: DataFrame, keyCol: String): Map[Int, (Long, Long)] = {
-    val rows = df.groupBy(col("part_bucket"))
+  private def fingerprintPass(df: DataFrame, keyCol: String): Map[Int, (Long, Long)] =
+    df.groupBy(col("part_bucket"))
       .agg(count(lit(1)), coalesce(bit_xor(xxhash64(col(keyCol))), lit(0L)))
       .collect()
-    if (rows.exists(_.isNullAt(0)))
-      throw new IllegalArgumentException(
-        "input contains NULL part_bucket values (e.g. a " +
-          "__HIVE_DEFAULT_PARTITION__ directory) — the pre-partitioned " +
-          "layout is invalid (rows would be silently dropped)")
-    rows.map(r => r.getInt(0) -> ((r.getLong(1), r.getLong(2)))).toMap
-  }
+      .map(r => r.getInt(0) -> ((r.getLong(1), r.getLong(2)))).toMap
 
   /** (bucket, key hash) -> one array holding (rows, XOR of key hashes) at
     * indices (2k, 2k+1) for every bucket k in [0, buckets): the staging

@@ -4,6 +4,7 @@ import graft.cli.Main
 import graft.synth.Synth
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** CLI verbs produce the reference's JSON shapes with contents matching
   * ground truth (printer.rs:6-62 framing; glossary.rs:218-278 shapes).
@@ -122,22 +123,24 @@ class CliSpec extends AnyFunSuite {
     assert(top.get(0).get("category").asText == "any")
   }
 
-  test("persisted --out/_idf is fingerprint-gated: corpus change regenerates it") {
+  test("a corpus change under the same --out scores with the new corpus's IDF") {
+    // every run computes its own IDF: a second corpus written into the
+    // same table directory must print exactly what a plain run over it
+    // prints, and no IDF table is kept beside the committed one
     val out = java.nio.file.Files.createTempDirectory("idfout").toString
-    def run(n: Long): Unit = {
+    def run(opts: Map[String, String]): String = {
       val buf = new java.io.ByteArrayOutputStream()
       Console.withOut(new java.io.PrintStream(buf, true, "UTF-8")) {
-        Main.run(spark, "categories", Map("synth" -> n.toString, "out" -> out))
+        Main.run(spark, "categories", opts)
       }
+      buf.toString("UTF-8")
     }
-    def sentinelN: Long = // N rides the sentinel row; idfFromTable knows it
-      graft.gloss.Classify.idfFromTable(spark.read.parquet(s"$out/_idf")).nDocs
-    run(300L)
-    val n1 = sentinelN
-    run(300L) // same corpus → reused (fingerprint matches, same N)
-    assert(sentinelN == n1)
-    run(600L) // different corpus → MUST regenerate, not silently reuse
-    assert(sentinelN > n1)
+    run(Map("synth" -> "300", "out" -> out))
+    val grown = run(Map("synth" -> "600", "out" -> out))
+    assert(grown == run(Map("synth" -> "600")))
+    Seq("_idf", "_idf_fp").foreach { f =>
+      assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(out, f)), s"$out/$f")
+    }
   }
 
   test("--fuzzy with --out: checkpointed table ≡ stdout threads (VERDICT r3 item 3)") {
@@ -173,25 +176,32 @@ class CliSpec extends AnyFunSuite {
         Main.run(spark, "threads", opts ++ Map("out" -> out, "buckets" -> "4"))
       }
     }
+    // every relative path under $out, plus the bytes of every manifest
+    def snapshot(): Map[String, String] = {
+      val root = java.nio.file.Paths.get(out)
+      val walk = java.nio.file.Files.walk(root)
+      try walk.iterator().asScala.map { p =>
+        val rel = root.relativize(p).toString
+        rel -> (if (rel.startsWith("_manifest") && java.nio.file.Files.isRegularFile(p))
+          java.nio.file.Files.readString(p) else "")
+      }.toMap
+      finally walk.close()
+    }
     run(Map("synth" -> "300")) // commit the table
-    val idfDocs0 =
-      graft.gloss.Classify.idfFromTable(spark.read.parquet(s"$out/_idf")).nDocs
     // same input + --validate: audit passes, resume is a manifest no-op
     run(Map("synth" -> "300", "validate" -> "true"))
+    val before = snapshot()
     // mutated input: the audit must detect the drifted committed units
     // and refuse to extend the table
     val e = intercept[Main.DriftError] {
       run(Map("synth" -> "500", "validate" -> "true"))
     }
     assert(e.getMessage.contains("drift") && e.getMessage.contains("buckets"))
-    // the refusing run left $out FULLY untouched — including the _idf
-    // sidecar, whose write is deferred past the audit (r6 review #1: it
-    // was overwritten with the drifted corpus's IDF before the audit ran)
-    assert(graft.gloss.Classify.idfFromTable(
-      spark.read.parquet(s"$out/_idf")).nDocs == idfDocs0)
-    // debug writes no table but maintains the sidecar: under --validate
-    // it must run the same audit instead of silently overwriting _idf
-    // and exiting 0 on a drifted corpus (r6 review ×2)
+    // the refusing run left $out FULLY untouched: no file added, removed
+    // or renamed, and every manifest byte-identical
+    assert(snapshot() == before)
+    // debug writes no table, but under --validate it runs the same
+    // read-only audit and exits 3 on a drifted corpus (r6 review ×2)
     val eDebug = intercept[Main.DriftError] {
       val buf = new java.io.ByteArrayOutputStream()
       Console.withOut(new java.io.PrintStream(buf, true, "UTF-8")) {
@@ -200,8 +210,7 @@ class CliSpec extends AnyFunSuite {
       }
     }
     assert(eDebug.getMessage.contains("drift"))
-    assert(graft.gloss.Classify.idfFromTable(
-      spark.read.parquet(s"$out/_idf")).nDocs == idfDocs0)
+    assert(snapshot() == before)
     // the audit blocked the write: the committed table still holds the
     // 300-doc clustering (no fresh units from the drifted input)
     val table = graft.tablefmt.Checkpoint.readCommitted(spark, out)

@@ -183,8 +183,8 @@ class PipelineSpec extends AnyFunSuite {
     val acc = spark.sparkContext.longAccumulator("corpus_rows_scanned")
     val docs = Synth.corpus(spark, seed, nDocs)
       .mapPartitions { it => it.map { d => acc.add(1); d } }
-    val (classified, release, _) =
-      graft.cli.Main.classifySteadyState(spark, docs, Map.empty, rereads = false)
+    val (classified, release) =
+      graft.cli.Main.classifySteadyState(spark, docs, persistClassified = false)
     try {
       val nKept = classified.count()
       Threads.threads(classified).count()
@@ -206,8 +206,8 @@ class PipelineSpec extends AnyFunSuite {
     val acc = spark.sparkContext.longAccumulator("corpus_rows_scanned_fused")
     val docs = Synth.corpus(spark, seed, nDocs)
       .mapPartitions { it => it.map { d => acc.add(1); d } }
-    val (classified, release, _) =
-      graft.cli.Main.classifySteadyState(spark, docs, Map.empty, rereads = false)
+    val (classified, release) =
+      graft.cli.Main.classifySteadyState(spark, docs, persistClassified = false)
     try {
       val th = Threads.threads(classified)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)

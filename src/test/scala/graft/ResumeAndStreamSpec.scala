@@ -205,85 +205,6 @@ class ResumeSpec extends AnyFunSuite {
       s"resume() changed $key: $before -> ${spark.conf.getOption(key)}")
   }
 
-  test("pre-bucketed input bypasses staging entirely (VERDICT r4 item 3)") {
-    // an input already laid out as part_bucket=K partition dirs (e.g. an
-    // extracted table written partitionBy("part_bucket")) serves pruned
-    // per-unit reads directly: resume() must write ZERO staging files
-    // while kill/resume semantics and the final table stay identical
-    val laidOut = Files.createTempDirectory("ckpt_prebucketed_in").toString
-    input.withColumn("part_bucket", Checkpoint.bucketOf("doc_id", 8))
-      .write.mode("overwrite").partitionBy("part_bucket").parquet(laidOut)
-    val pre = spark.read.parquet(laidOut)
-
-    val out = Files.createTempDirectory("ckpt_prebucketed").toString
-    intercept[RuntimeException] {
-      Checkpoint.resume(spark, pre, "doc_id", transform, out, buckets = 8,
-        failAtUnit = Some(5), inputPrePartitioned = true)
-    }
-    assert(Checkpoint.committedUnits(out) == Set(0, 1, 2, 3, 4))
-    assert(!Files.exists(java.nio.file.Paths.get(out, "_staged")),
-      "bypass mode wrote a _staged copy")
-    val r = Checkpoint.resume(spark, pre, "doc_id", transform, out, buckets = 8,
-      inputPrePartitioned = true)
-    assert(r.unitsSkipped == Seq(0, 1, 2, 3, 4) && r.unitsCommitted == Seq(5, 6, 7))
-    assert(!Files.exists(java.nio.file.Paths.get(out, "_staged")))
-
-    // table equals the staged-path run over the same logical input
-    val outStaged = Files.createTempDirectory("ckpt_prebucketed_ref").toString
-    Checkpoint.resume(spark, input, "doc_id", transform, outStaged, buckets = 8)
-    val a = Checkpoint.readCommitted(spark, out)
-      .select("doc_id", "n").collect().map(_.toString).sorted.toSeq
-    val b = Checkpoint.readCommitted(spark, outStaged)
-      .select("doc_id", "n").collect().map(_.toString).sorted.toSeq
-    assert(a == b && a.size == 1000)
-    // declared layout without the column is rejected, not silently staged
-    intercept[IllegalArgumentException] {
-      Checkpoint.resume(spark, input, "doc_id", transform,
-        Files.createTempDirectory("ckpt_badpre").toString, buckets = 8,
-        inputPrePartitioned = true)
-    }
-    // a MIS-declared layout (bucketed for a different `buckets`) fails
-    // loudly before committing anything — the in-planned filter would
-    // have silently dropped every row with part_bucket >= buckets
-    val laidOut16 = Files.createTempDirectory("ckpt_prebucketed16").toString
-    input.withColumn("part_bucket", Checkpoint.bucketOf("doc_id", 16))
-      .write.mode("overwrite").partitionBy("part_bucket").parquet(laidOut16)
-    val outBad = Files.createTempDirectory("ckpt_misdeclared").toString
-    val e = intercept[IllegalArgumentException] {
-      Checkpoint.resume(spark, spark.read.parquet(laidOut16), "doc_id", transform,
-        outBad, buckets = 8, inputPrePartitioned = true)
-    }
-    assert(e.getMessage.contains("outside [0, 8)"))
-    assert(Checkpoint.committedUnits(outBad).isEmpty)
-    // NULL part_bucket rows (__HIVE_DEFAULT_PARTITION__) also fail
-    // loudly — both on a fresh run and on a resume (where a bare
-    // !isin(done) filter would have silently dropped them)
-    import org.apache.spark.sql.functions.{col => c, when, lit}
-    val laidNull = Files.createTempDirectory("ckpt_prebucketed_null").toString
-    input.withColumn("part_bucket",
-        when(c("doc_id") === "doc-00000", lit(null).cast("int"))
-          .otherwise(Checkpoint.bucketOf("doc_id", 8)))
-      .write.mode("overwrite").partitionBy("part_bucket").parquet(laidNull)
-    val outNull = Files.createTempDirectory("ckpt_nullbucket").toString
-    val en = intercept[IllegalArgumentException] {
-      Checkpoint.resume(spark, spark.read.parquet(laidNull), "doc_id", transform,
-        outNull, buckets = 8, inputPrePartitioned = true)
-    }
-    assert(en.getMessage.contains("NULL part_bucket"))
-    // resume path (some units already committed): the NOT-in-done filter
-    // must keep NULL rows in, so the rejection stays loud on resume too
-    intercept[RuntimeException] {
-      Checkpoint.resume(spark, pre, "doc_id", transform,
-        outNull, buckets = 8, failAtUnit = Some(4), inputPrePartitioned = true)
-    }
-    assert(Checkpoint.committedUnits(outNull) == Set(0, 1, 2, 3))
-    val en2 = intercept[IllegalArgumentException] {
-      Checkpoint.resume(spark, spark.read.parquet(laidNull), "doc_id", transform,
-        outNull, buckets = 8, inputPrePartitioned = true)
-    }
-    assert(en2.getMessage.contains("NULL part_bucket"))
-  }
-
   test("failed parallel resume leaves no unit committing in the background") {
     val out = Files.createTempDirectory("ckpt_parfail").toString
     val e = intercept[RuntimeException] {

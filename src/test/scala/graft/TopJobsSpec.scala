@@ -135,4 +135,18 @@ class TopJobsSpec extends AnyFunSuite {
     assert(names.head.contains("extract_title") && !names.head.contains("classify_title"),
       names.head)
   }
+
+  test("categories and top with --out: Spark jobs on a first run and on a rerun") {
+    Classify.dictsBroadcast(spark)
+    Seq("categories" -> (9, 2), "top" -> (20, 6)).foreach { case (verb, (first, rerun)) =>
+      val out = java.nio.file.Files.createTempDirectory(s"$verb-out").toString
+      val opts = Map("synth" -> "2000", "out" -> out, "buckets" -> "4")
+      val plain = JobProbe(spark, s"$verb-plain")(graft.cli.Main.run(spark, verb, Map("synth" -> "2000")))
+      val r1 = JobProbe(spark, s"$verb-out-first")(graft.cli.Main.run(spark, verb, opts))
+      val r2 = JobProbe(spark, s"$verb-out-rerun")(graft.cli.Main.run(spark, verb, opts))
+      assert(r1.stdout == plain.stdout, verb)
+      assert(r2.stdout == plain.stdout, verb)
+      assert((r1.jobs, r2.jobs) == ((first, rerun)), s"$verb: Spark jobs (first run, rerun)")
+    }
+  }
 }
