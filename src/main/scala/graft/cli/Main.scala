@@ -25,14 +25,14 @@ import org.apache.spark.sql.functions._
   * the real sink (SURVEY.md §1.3 S4). `languages`, `news` and
   * `categories` print the `MaxCliRows` smallest ids of each frame
   * ([[smallestIdsByKey]], one exchange-free job), so a capped frame does
-  * not depend on the partitioning. `languages --htmldir <dir> --out <table>
-  * --buckets 4` runs 7 Spark jobs: the stdout ids (which also build the
-  * extraction cache), the staging write's rebalance map and its write,
-  * and one write per commit unit (LanguagesJobsSpec). The classify verbs
-  * compute the corpus IDF on every run, `--out` or not; with
-  * `--synth 2000 --out <table> --buckets 4`, `categories` runs 9 jobs on a
-  * first run and 2 on a rerun into the same table, `top` 20 and 6
-  * (TopJobsSpec).
+  * not depend on the partitioning. `languages --htmldir <dir> --out <table>`
+  * runs 4 Spark jobs whatever `--buckets` is: the stdout ids (which also
+  * build the extraction cache), the staging write's rebalance map and its
+  * write, and the one transform write; commit units are then sealed by
+  * directory moves (LanguagesJobsSpec). The classify verbs compute the
+  * corpus IDF on every run, `--out` or not; with `--synth 2000 --out
+  * <table>` at 4 or 16 buckets, `categories` runs 6 jobs on a first run
+  * and 2 on a rerun into the same table, `top` 11 and 6 (TopJobsSpec).
   */
 object Main {
 
@@ -241,8 +241,8 @@ object Main {
     val buckets = longOpt(opts, "buckets", 16L, min = 1L, max = 1000000L).toInt
 
     // Checkpointed sink: commit units slice the INPUT by key hash, and the
-    // transform runs per disjoint slice — resume recomputes only
-    // uncommitted slices, never the whole pipeline. With --validate true,
+    // bucket-local transform runs once over the uncommitted slices —
+    // resume recomputes only those, never the whole pipeline. With --validate true,
     // the opt-in lineage audit runs FIRST (one extra input scan): any
     // committed unit whose current input slice no longer matches its
     // sealed fingerprint aborts the run with the drifted-bucket listing —
@@ -260,24 +260,26 @@ object Main {
               "the drifted units' manifests to force their rewrite)")
       }
 
-    // a table whose committed units were bucketed by a DIFFERENT key is a
-    // verb/--out mismatch (e.g. `threads --out <news-table>`), not input
-    // drift — the library's audit/resume raise the typed KeyingMismatch
-    // (ONE predicate, one manifest read); surface it as the usage error
-    // it is (exit 2) instead of a stack trace (ADVICE r6)
+    // a table whose committed units were bucketed by a DIFFERENT key or
+    // bucket count is a verb/--out/--buckets mismatch (e.g. `threads --out
+    // <news-table>`), not input drift — the library's audit/resume raise
+    // the typed KeyingMismatch (ONE predicate, one manifest read); surface
+    // it as the usage error it is (exit 2) instead of a stack trace
+    // (ADVICE r6)
+    def keyingAsUsageError(body: => Unit): Unit =
+      try body
+      catch {
+        case e: Checkpoint.KeyingMismatch =>
+          throw new CliArgError(
+            e.getMessage + " — point --out at a fresh directory or " +
+              "rerun the verb and --buckets that wrote it")
+      }
     def writeOut(input: org.apache.spark.sql.DataFrame, keyCol: String,
                  transform: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame): Unit =
       opts.get("out").foreach { out =>
-        try {
+        keyingAsUsageError {
           auditIfRequested(input, keyCol, out)
-          // concurrent units: no idle cores between one unit's job and the next
-          Checkpoint.resume(spark, input, keyCol, transform, out, buckets,
-            unitParallelism = spark.sparkContext.defaultParallelism)
-        } catch {
-          case e: Checkpoint.KeyingMismatch =>
-            throw new CliArgError(
-              e.getMessage + " — point --out at a fresh directory or " +
-                "rerun the verb that wrote it")
+          Checkpoint.resume(spark, input, keyCol, transform, out, buckets)
         }
       }
 
@@ -372,7 +374,7 @@ object Main {
           // doc_id — spurious drift again) — both refuse with the real
           // story instead of a drift report.
           if (opts.get("validate").contains("true"))
-            opts.get("out").foreach { out =>
+            opts.get("out").foreach { out => keyingAsUsageError {
               val (nCommitted, recorded) = Checkpoint.recordedKeying(out)
               recorded.toList match {
                 case _ if nCommitted == 0 => // nothing committed: audit is vacuous
@@ -392,7 +394,7 @@ object Main {
                       "debug cannot audit it; run the audit via the verb that " +
                       "wrote the table (e.g. threads --fuzzy --validate true)")
               }
-            }
+            }}
         } finally release()
 
       case "threads" | "top" =>
@@ -416,13 +418,18 @@ object Main {
               Some(Threads.fuzzyKeyed(classified.toDF())
                 .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
             else None
+          // the table's transform is the thread aggregation with the
+          // sink's part_bucket as one more min column: it is constant
+          // within a title or component, and partitionBy drops it from
+          // the files, which keep the thread table's schema
           val th = fuzzyKeyed match {
             case Some(keyed) =>
-              writeOut(keyed, "component", df => Threads.threadsFromKeyed(df))
+              writeOut(keyed, "component", df => Threads.saltedSizeSample(df, "component",
+                Threads.ArticleSampleK, Seq("title_norm", "category", "part_bucket")).drop("component"))
               Threads.threadsFromKeyed(keyed)
             case None =>
-              writeOut(classified.toDF(), "title_norm",
-                df => Threads.threads(df.as[graft.model.ClassifiedDoc]))
+              writeOut(classified.toDF(), "title_norm", df => Threads.saltedSizeSample(df,
+                "title_norm", Threads.ArticleSampleK, Seq("category", "part_bucket")))
               Threads.threads(classified)
           }
           if (verb == "threads") {

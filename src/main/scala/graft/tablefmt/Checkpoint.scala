@@ -5,9 +5,8 @@ import org.apache.spark.sql.{DataFrame, Encoder, Encoders, Observation, SaveMode
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.IntegerType
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import java.util.concurrent.{Callable, Executors}
-import java.util.concurrent.atomic.AtomicReference
 import scala.concurrent.Await
 import scala.concurrent.duration._
 import scala.jdk.CollectionConverters._
@@ -20,28 +19,30 @@ import scala.jdk.CollectionConverters._
   *
   * Layout:
   * {{{
-  *   out/data/part_bucket=K/  (parquet files; one directory per commit unit,
-  *                             about one file per advisory-size chunk)
-  *   out/_manifest/part-K.json  (sealed AFTER unit K's data commit)
+  *   out/data/part_bucket=K/    (parquet files; one directory per commit
+  *                               unit, moved in from _output)
+  *   out/_manifest/part-K.json  (sealed AFTER unit K's directory move)
   *   out/_staged/part_bucket=K/ (bucketed input staging, rebalanced to
-  *                             about one file per advisory-size chunk;
-  *                             removed on success)
+  *                               about one file per advisory-size chunk)
+  *   out/_output/part_bucket=K/ (the one transform write, partitioned by
+  *                               bucket; _staged and _output are removed
+  *                               once every planned unit commits)
   * }}}
   *
   * The input is split into `buckets` commit units by a stable hash of the
-  * row key. Each unit is one Spark job (internally parallel over all
-  * executors) that also counts its own output rows through an
-  * [[org.apache.spark.sql.Observation]]; its manifest is sealed only
-  * after the job succeeds, with a
-  * temp-file + atomic-rename protocol. A killed run therefore leaves only
-  * fully-committed units' manifests; [[resume]] recomputes exactly the
-  * uncommitted units (dynamic partition overwrite scrubs any torn files
-  * from the killed attempt).
+  * row key. The transform runs ONCE per call over every uncommitted unit,
+  * as one partitioned write; each unit then commits with no Spark job: its
+  * output directory is moved into `data/` and its manifest is sealed with
+  * a temp-file + atomic-rename protocol. A killed run therefore leaves
+  * only fully-committed units' manifests; [[resume]] recomputes exactly
+  * the uncommitted units (a unit directory moved in but never sealed is
+  * deleted before its replacement moves in).
   *
-  * Scale note: commit-unit count is a granularity knob, not a parallelism
-  * bound — each unit's job fans out over every executor. At 10^12 docs
-  * you pick O(100-1000) units so a restart loses ≤ 0.1-1% of work, while
-  * each unit is still a full-cluster job.
+  * Scale note: the unit count sets neither the job count nor the
+  * parallelism (the one write fans out over every executor); it sets what
+  * a rerun skips. A run killed before its transform write finishes keeps
+  * only the units earlier runs sealed; one killed in the commit loop
+  * keeps every unit it sealed.
   */
 object Checkpoint {
 
@@ -53,7 +54,8 @@ object Checkpoint {
       wallMs: Long,
       attempt: Int,
       status: String,
-      keyCol: String = "")
+      keyCol: String = "",
+      buckets: Int = 0)
 
   final case class WriteReport(unitsPlanned: Seq[Int], unitsSkipped: Seq[Int],
                                unitsCommitted: Seq[Int])
@@ -83,8 +85,10 @@ object Checkpoint {
         n.get("n_input").asLong(), n.get("n_output").asLong(),
         n.get("wall_ms").asLong(), n.get("attempt").asInt(),
         n.get("status").asText(),
-        // pre-r7 manifests carry no key_col — "" = unknown (checks skip)
-        Option(n.get("key_col")).map(_.asText).getOrElse(""))
+        // older manifests carry no key_col / buckets — "" and 0 = unknown
+        // (checks skip)
+        Option(n.get("key_col")).map(_.asText).getOrElse(""),
+        Option(n.get("buckets")).map(_.asInt).getOrElse(0))
     }
   }
 
@@ -114,20 +118,29 @@ object Checkpoint {
   def recordedKeyCols(out: String): Set[String] = recordedKeying(out)._2
 
   /** A fingerprint audit or a resume against a table whose committed
-    * units were bucketed by a DIFFERENT key is meaningless (every bucket
-    * hash differs) — fail with the real story instead of a spurious
-    * drift report / a silently-forked table (ADVICE r6). Pre-key_col
-    * manifests record no key: the check SKIPS (the caller asserts the
-    * key, and refusing would block legitimate same-keyed resumes of
-    * older tables — ResumeSpec pins the skip).
+    * units were bucketed by a DIFFERENT key or into a DIFFERENT number of
+    * buckets is meaningless (the slices differ) — fail with the real story
+    * instead of a spurious drift report / a silently-forked table (ADVICE
+    * r6). Re-slicing duplicates rows: under 8 buckets, units 4-7 hold rows
+    * that 4-bucket units 0-3 already committed. Manifests that predate
+    * key_col or buckets recording skip that check (the caller asserts it,
+    * and refusing would block legitimate resumes of older tables —
+    * ResumeSpec pins the skip).
     */
-  def requireSameKeying(out: String, keyCol: String): Unit = {
-    val recorded = recordedKeyCols(out)
-    if (recorded.nonEmpty && recorded != Set(keyCol))
+  def requireSameKeying(out: String, keyCol: String, buckets: Int): Unit = {
+    val ms = readManifests(out)
+    val keys = ms.map(_.keyCol).filter(_.nonEmpty).toSet
+    if (keys.nonEmpty && keys != Set(keyCol))
       throw new KeyingMismatch(
-        s"table at $out is keyed by '${recorded.mkString(",")}' but this " +
+        s"table at $out is keyed by '${keys.mkString(",")}' but this " +
           s"operation uses key '$keyCol' — not input drift; run it via " +
           "the verb/keying that wrote the table")
+    val counts = ms.map(_.buckets).filter(_ > 0).toSet
+    if (counts.nonEmpty && counts != Set(buckets))
+      throw new KeyingMismatch(
+        s"table at $out is split into ${counts.mkString(",")} buckets but " +
+          s"this operation uses $buckets — a different count re-slices the " +
+          "committed rows; use the table's bucket count")
   }
 
   private def sealManifest(out: String, m: UnitManifest): Unit = {
@@ -138,7 +151,8 @@ object Checkpoint {
       .put("bucket", m.bucket).put("input_fingerprint", m.inputFingerprint)
       .put("n_input", m.nInput).put("n_output", m.nOutput)
       .put("wall_ms", m.wallMs).put("attempt", m.attempt)
-      .put("status", m.status).put("key_col", m.keyCol))
+      .put("status", m.status).put("key_col", m.keyCol)
+      .put("buckets", m.buckets))
     val tmp = manifestDir(out).resolve(s".part-${m.bucket}.json.tmp")
     Files.writeString(tmp, json)
     Files.move(tmp, manifestDir(out).resolve(s"part-${m.bucket}.json"),
@@ -153,144 +167,140 @@ object Checkpoint {
       finally walk.close()
     }
 
-  /** Write `transform(input-slice)` per commit unit, skipping committed
-    * units. `input` must contain `keyCol`; `transform` maps a unit's rows
-    * to the output rows for that unit.
+  /** Write `transform(input)` as a checkpointed table, skipping committed
+    * units. `input` must contain `keyCol`. `transform` must be
+    * BUCKET-LOCAL: it receives the staged rows with their `part_bucket`
+    * column and must return rows that keep it, each output row depending
+    * only on input rows of its own bucket (true of any transform that is
+    * row-wise or aggregates by `keyCol`).
     *
     * Scan protocol (VERDICT r3 item 1): the uncommitted slices are STAGED
     * once — one full input scan plus one rebalance exchange on
     * `part_bucket`, bucketed into `part_bucket=K` partition directories
-    * under `$out/_staged` — so every per-unit read below is a
-    * partition-pruned directory read. The exchange lets AQE coalesce small
-    * buckets and split skewed ones to the advisory partition size, so a
-    * bucket stages as about one file per advisory-size chunk instead of
-    * one file per input partition (the file count follows the data size,
-    * not the input's partitioning). The per-unit lineage fingerprints
-    * (`n_input`, `input_fingerprint`) come from an observation on the
-    * staging write itself: a per-bucket aggregate with an O(buckets)
-    * buffer, placed after the rebalance so it runs in the write's result
-    * stage. No pass re-reads the staged keys; only a plan folded to an
-    * empty relation, which reports no metrics, recounts them. Each unit's
-    * `n_output` comes from an observation on its own write job, so no
-    * unit reads its output back either. A fresh N-bucket
+    * under `$out/_staged`. The exchange lets AQE coalesce small buckets
+    * and split skewed ones to the advisory partition size, so a bucket
+    * stages as about one file per advisory-size chunk instead of one file
+    * per input partition (the file count follows the data size, not the
+    * input's partitioning). The per-unit lineage fingerprints (`n_input`,
+    * `input_fingerprint`) come from an observation on the staging write
+    * itself: a per-bucket aggregate with an O(buckets) buffer, placed
+    * after the rebalance so it runs in the write's result stage. A fresh
     * run therefore scans the input exactly once (ResumeSpec asserts this
-    * with an input-side accumulator); the previous form filtered the
-    * un-staged input on the DERIVED bucket column per unit — no pruning
-    * possible — costing 2·buckets full scans, which at the documented
-    * 100-1000 units for 10^12 docs was 200-2000 corpus reads. The staging
-    * dir is removed once every planned unit commits; a killed run leaves
-    * it behind, and the next resume() re-stages the still-uncommitted
-    * buckets from the CURRENT input (same drift semantics as before —
-    * committed units are protected by their sealed manifests, and
-    * [[validateCommitted]] remains the opt-in drift audit).
+    * with an input-side accumulator).
+    *
+    * The transform then runs ONCE over the staged rows, written with
+    * `partitionBy("part_bucket")` to `$out/_output`; each unit's
+    * `n_output` comes from the same kind of observation on that write. No
+    * pass re-reads the staged keys or the output; only a staging plan
+    * folded to an empty relation, which reports no metrics, recounts the
+    * staged keys. Committing a
+    * unit is then two renames: its `_output` directory into `data/`, and
+    * its manifest into `_manifest/`. Both transient directories are
+    * cleared at the start of every call and removed once every planned
+    * unit commits; the next resume() after a kill re-stages the
+    * still-uncommitted buckets from the CURRENT input (committed units
+    * are protected by their sealed manifests, and [[validateCommitted]]
+    * remains the opt-in drift audit).
     *
     * Rows round-trip through parquet during staging; input column types
     * must be parquet-representable (true for every source this engine
     * reads — parquet/Iceberg tables in, parquet out).
     *
-    * @param failAtUnit      test-only failpoint: throw before committing
-    *                        this unit (simulates a killed spark-submit)
-    * @param unitParallelism concurrent unit jobs (each still fans out over
-    *                        all executors; >1 overlaps scheduling gaps —
-    *                        Spark's scheduler interleaves the jobs; safe
-    *                        because each unit writes to ITS OWN directory,
-    *                        so no two jobs share a FileOutputCommitter
-    *                        `_temporary`). The default 1 runs units in
-    *                        order; the CLI passes the session's default
-    *                        parallelism. Unit jobs run under the caller's
-    *                        job group. Kill semantics stay manifest-exact
-    *                        either way: after a unit fails no further unit
-    *                        starts, and the in-flight ones finish before
-    *                        the failure is rethrown, so nothing commits
-    *                        after `resume` has thrown.
+    * @param failAtUnit test-only failpoint: throw before committing this
+    *                   unit (simulates a killed spark-submit)
     */
   def resume(spark: SparkSession, input: DataFrame, keyCol: String,
              transform: DataFrame => DataFrame, out: String, buckets: Int,
-             failAtUnit: Option[Int] = None,
-             unitParallelism: Int = 1): WriteReport = {
-    requireSameKeying(out, keyCol)
+             failAtUnit: Option[Int] = None): WriteReport = {
+    requireSameKeying(out, keyCol, buckets)
     val done = committedUnits(out)
     val planned = (0 until buckets).filterNot(done)
-    val stagedDir = s"$out/_staged"
-    if (planned.isEmpty) {
-      // everything committed — also reap staging a crashed run may have
-      // left between its last sealManifest and its cleanup
-      deleteRecursively(Paths.get(stagedDir))
-      return WriteReport(planned, done.toSeq.sorted, Nil)
-    }
+    val stagedDir = Paths.get(out, "_staged")
+    val outputDir = Paths.get(out, "_output")
+    // Clear transient directories FIRST — a bucket that became empty in
+    // the current input must not keep a stale directory from a crashed
+    // run and commit rows that no longer exist. With everything committed
+    // this also reaps what a crash after the last seal left behind.
+    deleteRecursively(stagedDir)
+    deleteRecursively(outputDir)
+    if (planned.isEmpty) return WriteReport(planned, done.toSeq.sorted, Nil)
 
-    // stage the uncommitted slices: the ONE full input scan of this call.
-    // Clear any previous staging FIRST — a bucket that became empty in the
-    // current input must not keep a stale directory from a crashed run
-    // and commit rows that no longer exist.
-    deleteRecursively(Paths.get(stagedDir))
-    val observed = Observation()
+    // stage the uncommitted slices: the ONE full input scan of this call
+    val stagedFps = Observation()
     input.withColumn("part_bucket", bucketOf(keyCol, buckets))
       .filter(col("part_bucket").isin(planned: _*))
       .hint("rebalance", col("part_bucket"))
       // after the exchange: the metric is computed in the write's result
       // stage, whose task updates Spark applies once
-      .observe(observed, unitFingerprints(buckets)(
+      .observe(stagedFps, unitFingerprints(buckets)(
         col("part_bucket"), xxhash64(col(keyCol))).as("fp"))
       .write.mode(SaveMode.Overwrite)
       .partitionBy("part_bucket")
-      .parquet(stagedDir)
+      .parquet(stagedDir.toString)
     // explicit schema: empty slices leave no files to infer from, and the
     // partition column must come back as int, not inferred
-    val stagedSchema = org.apache.spark.sql.types.StructType(
-      input.schema.fields :+ org.apache.spark.sql.types.StructField(
-        "part_bucket", org.apache.spark.sql.types.IntegerType))
-    val staged = spark.read.schema(stagedSchema).parquet(stagedDir)
-    val metrics = Await.result(observed.future, ObservationTimeout)
-    // per-unit lineage fingerprints: bucket -> (rows, XOR of key hashes —
-    // order/partition independent, overflow-free). A plan the optimizer
-    // folded to an empty relation reports no metrics (an empty row):
-    // recount the staged slices instead.
-    val fps: Map[Int, (Long, Long)] =
-      if (metrics.length == 0) fingerprintPass(staged, keyCol)
-      else {
-        val acc = metrics.getSeq[Long](0)
-        planned.map(k => k -> ((acc(2 * k), acc(2 * k + 1)))).toMap
-      }
+    val staged = spark.read.schema(input.schema.add("part_bucket", IntegerType))
+      .parquet(stagedDir.toString)
 
-    def runUnit(k: Int): Int = {
-      if (failAtUnit.contains(k))
-        throw new RuntimeException(s"failpoint: killed before unit $k")
-      val t0 = System.nanoTime()
-      val (nInput, fpxor) = fps.getOrElse(k, (0L, 0L))
-      val slice = staged.filter(col("part_bucket") === k) // pruned dir read
-      // observed on the OUTPUT side: an observation under the transform
-      // is pruned when the transform folds to an empty relation
-      val observed = Observation()
-      val outRows = transform(slice.drop("part_bucket"))
-        .observe(observed, count(lit(1)).as("n"))
-      // each unit writes DIRECTLY to its own partition directory — the
-      // Hive-style dir name keeps the partition-discovery layout, while
-      // giving every unit job a private FileOutputCommitter `_temporary`
-      // (concurrent units can't clobber each other) and leaving no
-      // session-global partitionOverwriteMode side effect (VERDICT r4
-      // items 7 + ADVICE). mode=Overwrite scrubs any torn files a crash
-      // between a previous attempt's data write and its sealManifest left
-      // behind (only ever an UNSEALED partition: sealed units are
-      // filtered out of `planned`), and a zero-row transform overwrites
-      // to an EMPTY directory rather than sealing stale rows.
-      val unitDir = s"$out/data/part_bucket=$k"
-      outRows.write.mode(SaveMode.Overwrite).parquet(unitDir)
-      // the metrics arrive through the listener bus; bounded, so a lost
-      // event fails the unit (unsealed, recomputed on resume) instead of
-      // hanging the run
-      val nOutput = Await.result(observed.future, ObservationTimeout).getLong(0)
-      val attempt = 1 // committed manifests are never re-attempted
-      sealManifest(out, UnitManifest(k, fpxor, nInput, nOutput,
-        (System.nanoTime() - t0) / 1000000, attempt, "committed", keyCol))
-      k
+    // the ONE transform write; observed on the OUTPUT side, since an
+    // observation under the transform is pruned when the transform folds
+    // to an empty relation
+    val t0 = System.nanoTime()
+    val outRows = transform(staged)
+    require(outRows.columns.contains("part_bucket"),
+      "resume's transform must be bucket-local: its output must keep the " +
+        s"part_bucket column of its input rows (got ${outRows.columns.mkString(", ")})")
+    val outputCounts = Observation()
+    outRows
+      .observe(outputCounts, unitFingerprints(buckets)(col("part_bucket"), lit(0L)).as("n"))
+      .write.mode(SaveMode.Overwrite)
+      .partitionBy("part_bucket")
+      .parquet(outputDir.toString)
+
+    // per-unit lineage fingerprints: bucket -> (rows, XOR of key hashes —
+    // order/partition independent, overflow-free). A staging plan the
+    // optimizer folded to an empty relation reports no metrics (an empty
+    // row): recount the staged slices instead. The metrics arrive through
+    // the listener bus; bounded, so a lost event fails the run (nothing
+    // sealed, recomputed on resume) instead of hanging it.
+    val fps = Await.result(stagedFps.future, ObservationTimeout)
+    val fp: Int => (Long, Long) =
+      if (fps.length == 0) { val m = fingerprintPass(staged, keyCol); k => m.getOrElse(k, (0L, 0L)) }
+      else { val acc = fps.getSeq[Long](0); k => (acc(2 * k), acc(2 * k + 1)) }
+    val nOutput = Await.result(outputCounts.future, ObservationTimeout).getSeq[Long](0)
+
+    // a unit with no output rows has no directory: it commits one empty
+    // parquet file with the output schema (what a zero-row write leaves),
+    // so a table whose units are all empty still reads back as zero rows
+    val emptyFile = planned.find(k => !Files.isDirectory(outputDir.resolve(s"part_bucket=$k"))).map { _ =>
+      val dir = outputDir.resolve("_empty")
+      outRows.drop("part_bucket").limit(0).write.parquet(dir.toString)
+      val ls = Files.list(dir)
+      try ls.iterator().asScala.find(_.getFileName.toString.endsWith(".parquet")).get
+      finally ls.close()
     }
 
-    val committed =
-      if (unitParallelism <= 1) planned.map(runUnit)
-      else runConcurrently(planned, unitParallelism)(runUnit)
-    deleteRecursively(Paths.get(stagedDir)) // every planned unit committed
-    WriteReport(planned, done.toSeq.sorted, committed.sorted)
+    // commit in bucket order: no Spark job from here on
+    Files.createDirectories(Paths.get(out, "data"))
+    for (k <- planned) {
+      if (failAtUnit.contains(k))
+        throw new RuntimeException(s"failpoint: killed before unit $k")
+      val unitDir = Paths.get(out, "data", s"part_bucket=$k")
+      // only ever an UNSEALED directory (sealed units are not planned):
+      // what a crash between a previous move and its seal left behind
+      deleteRecursively(unitDir)
+      val written = outputDir.resolve(s"part_bucket=$k")
+      if (Files.isDirectory(written)) Files.move(written, unitDir, StandardCopyOption.ATOMIC_MOVE)
+      else emptyFile.foreach(f => Files.copy(f, Files.createDirectory(unitDir).resolve(f.getFileName)))
+      val (nInput, fpxor) = fp(k)
+      // wall_ms runs from the transform write's start to this unit's
+      // seal; committed manifests are never re-attempted
+      sealManifest(out, UnitManifest(k, fpxor, nInput, nOutput(2 * k),
+        (System.nanoTime() - t0) / 1000000, 1, "committed", keyCol, buckets))
+    }
+    deleteRecursively(stagedDir) // every planned unit committed
+    deleteRecursively(outputDir)
+    WriteReport(planned, done.toSeq.sorted, planned)
   }
 
   private val ObservationTimeout = 5.minutes
@@ -308,7 +318,8 @@ object Checkpoint {
   /** (bucket, key hash) -> one array holding (rows, XOR of key hashes) at
     * indices (2k, 2k+1) for every bucket k in [0, buckets): the staging
     * write's [[fingerprintPass]], as an aggregate an Observation can
-    * carry. The buffer is O(buckets) whatever the row count.
+    * carry (with a zero hash, the output write's per-unit row count). The
+    * buffer is O(buckets) whatever the row count.
     */
   private final class UnitFingerprints(buckets: Int)
       extends Aggregator[(Int, Long), Array[Long], Array[Long]] {
@@ -335,29 +346,6 @@ object Checkpoint {
   private def unitFingerprints(buckets: Int) =
     udaf(new UnitFingerprints(buckets), Encoders.tuple(Encoders.scalaInt, Encoders.scalaLong))
 
-  /** Runs `unit` over `ks` on `parallelism` pool threads. The threads are
-    * created by the calling thread, so they inherit its Spark local
-    * properties (job group, scheduler pool) and unit jobs count towards
-    * the caller's job group. After the first failure no further unit
-    * starts; the in-flight ones are awaited before the failure is
-    * rethrown, so no unit commits after this returns or throws.
-    */
-  private def runConcurrently(ks: Seq[Int], parallelism: Int)(unit: Int => Int): Seq[Int] = {
-    val failure = new AtomicReference[Throwable]()
-    val tasks = ks.map { k =>
-      (() => {
-        if (failure.get == null)
-          try unit(k) catch { case t: Throwable => failure.compareAndSet(null, t) }
-        ()
-      }): Callable[Unit]
-    }
-    val pool = Executors.newFixedThreadPool(parallelism)
-    try pool.invokeAll(tasks.asJava) // returns once every task has finished
-    finally pool.shutdown()
-    Option(failure.get).foreach(t => throw t)
-    ks
-  }
-
   /** Lineage audit: recompute each committed unit's input fingerprint and
     * compare against its sealed manifest — detects input drift between a
     * kill and a resume (a unit whose input changed would silently keep
@@ -366,7 +354,7 @@ object Checkpoint {
     */
   def validateCommitted(spark: SparkSession, input: DataFrame, keyCol: String,
                         out: String, buckets: Int): Seq[Int] = {
-    requireSameKeying(out, keyCol)
+    requireSameKeying(out, keyCol, buckets)
     val manifests = readManifests(out).map(m => m.bucket -> m).toMap
     if (manifests.isEmpty) return Seq.empty
     val current = fingerprintPass(input

@@ -43,8 +43,8 @@ class LanguagesJobsSpec extends AnyFunSuite {
     root
   }
 
-  private def opts(dir: Path, out: String) =
-    Map("htmldir" -> dir.toString, "out" -> out, "buckets" -> Buckets.toString)
+  private def opts(dir: Path, out: String, buckets: Int = Buckets) =
+    Map("htmldir" -> dir.toString, "out" -> out, "buckets" -> buckets.toString)
 
   /** The rows the verb stages: the extraction of the directory's docs. */
   private def stagedInput(dir: Path): DataFrame =
@@ -94,21 +94,24 @@ class LanguagesJobsSpec extends AnyFunSuite {
     assert(Main.smallestIdsByKey(spark.emptyDataset[(String, String)].toDF(), 3).isEmpty)
   }
 
-  test("languages --htmldir --out --buckets 4 runs in 7 Spark jobs and caches only the extraction") {
+  test("languages --htmldir --out runs in 4 Spark jobs at 4 or 16 buckets") {
     val dir = htmlDir(400, 11L)
-    val out = Files.createTempDirectory("langjobs_out").resolve("t").toString
-    val run = JobProbe(spark, "languages-job-count") {
-      Main.run(spark, "languages", opts(dir, out))
-    }
     // one job each: the stdout ids (which also build the extraction
     // cache), the staging write's rebalance map, the staging write, and
-    // the four unit writes
-    val names = run.cachedRddNames
-    assert(run.jobs == 7, s"Spark jobs per languages: ${run.jobs}; cached: ${names.mkString(" | ")}")
-    assert(names.size == 1, s"cached RDDs: ${names.mkString(" | ")}")
-    assert(run.stdout == expectedStdout(dir))
-    assert(Checkpoint.committedUnits(out) == (0 until Buckets).toSet)
-    assertLineage(dir, out)
+    // the one transform write; units commit by directory moves
+    for (buckets <- Seq(Buckets, 16)) {
+      val out = Files.createTempDirectory("langjobs_out").resolve("t").toString
+      val run = JobProbe(spark, "languages-job-count") {
+        Main.run(spark, "languages", opts(dir, out, buckets))
+      }
+      val names = run.cachedRddNames
+      assert(run.jobs == 4,
+        s"Spark jobs per languages --buckets $buckets: ${run.jobs}; cached: ${names.mkString(" | ")}")
+      assert(names.size == 1, s"cached RDDs: ${names.mkString(" | ")}")
+      assert(run.stdout == expectedStdout(dir))
+      assert(Checkpoint.committedUnits(out) == (0 until buckets).toSet)
+      if (buckets == Buckets) assertLineage(dir, out)
+    }
   }
 
   test("a failAtUnit resume through the verb seals the same lineage as a fresh run") {
@@ -149,5 +152,6 @@ class LanguagesJobsSpec extends AnyFunSuite {
     val ms = Checkpoint.readManifests(out)
     assert(ms.map(_.bucket) == (0 until Buckets))
     assert(ms.forall(m => m.nInput == 0L && m.nOutput == 0L && m.inputFingerprint == 0L))
+    assert(Checkpoint.readCommitted(spark, out).count() == 0L) // schema kept
   }
 }

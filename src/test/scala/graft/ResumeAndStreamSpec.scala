@@ -21,8 +21,9 @@ class ResumeSpec extends AnyFunSuite {
     (0 until 1000).map(i => (f"doc-$i%05d", s"text number $i")).toDF("doc_id", "text")
   }
 
+  // bucket-local: row-wise, and keeps the staged part_bucket column
   private val transform: DataFrame => DataFrame =
-    df => df.select(col("doc_id"), length(col("text")).as("n"))
+    df => df.select(col("doc_id"), length(col("text")).as("n"), col("part_bucket"))
 
   test("kill-after-K resume recomputes only uncommitted units (SURVEY.md §5.2.5)") {
     val out = Files.createTempDirectory("ckpt").toString
@@ -89,6 +90,9 @@ class ResumeSpec extends AnyFunSuite {
     assert(ms.map(_.bucket) == Seq(0, 1, 2, 3))
     assert(ms.forall(_.nOutput == 0L))
     assert(ms.map(_.nInput).sum == 1000L) // inputs still fingerprinted
+    // every unit holds a zero-row file with the output schema
+    assert(Checkpoint.readCommitted(spark, out).columns.toSeq == Seq("doc_id", "text", "part_bucket"))
+    assert(Checkpoint.readCommitted(spark, out).count() == 0L)
   }
 
   test("stale staging from a crashed run never leaks old rows into new commits") {
@@ -169,6 +173,7 @@ class ResumeSpec extends AnyFunSuite {
     val extractT: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame =
       df => graft.extract.Extract.run(df.as[graft.model.Doc]).toDF()
         .select(col("doc_id"), col("lang"), col("title_norm"))
+        .withColumn("part_bucket", Checkpoint.bucketOf("doc_id", 4)) // row-wise: re-derived
     intercept[RuntimeException] {
       Checkpoint.resume(spark, docs, "doc_id", extractT, out, buckets = 4, failAtUnit = Some(2))
     }
@@ -177,20 +182,6 @@ class ResumeSpec extends AnyFunSuite {
     val got = Checkpoint.readCommitted(spark, out).count()
     val want = graft.extract.Extract.run(graft.synth.Synth.corpus(spark, 42L, 400L)).count()
     assert(got == want)
-  }
-
-  test("parallel unit execution equals sequential output") {
-    val outSeq = Files.createTempDirectory("ckpt_seq").toString
-    val outPar = Files.createTempDirectory("ckpt_par").toString
-    Checkpoint.resume(spark, input, "doc_id", transform, outSeq, buckets = 8)
-    val r = Checkpoint.resume(spark, input, "doc_id", transform, outPar,
-      buckets = 8, unitParallelism = 4)
-    assert(r.unitsCommitted == (0 until 8))
-    val a = Checkpoint.readCommitted(spark, outSeq)
-      .select("doc_id", "n").collect().map(_.toString).sorted.toSeq
-    val b = Checkpoint.readCommitted(spark, outPar)
-      .select("doc_id", "n").collect().map(_.toString).sorted.toSeq
-    assert(a == b)
   }
 
   test("resume leaves no session-global conf side effect (VERDICT r4 item 7)") {
@@ -205,35 +196,11 @@ class ResumeSpec extends AnyFunSuite {
       s"resume() changed $key: $before -> ${spark.conf.getOption(key)}")
   }
 
-  test("failed parallel resume leaves no unit committing in the background") {
-    val out = Files.createTempDirectory("ckpt_parfail").toString
-    val e = intercept[RuntimeException] {
-      Checkpoint.resume(spark, input, "doc_id", transform, out, buckets = 8,
-        failAtUnit = Some(5), unitParallelism = 4)
-    }
-    assert(e.getMessage.contains("failpoint"))
-    val atThrow = Checkpoint.committedUnits(out)
-    assert(!atThrow.contains(5))
-    Thread.sleep(2000) // a sibling still running would seal in this window
-    assert(Checkpoint.committedUnits(out) == atThrow,
-      "units committed after resume() had thrown")
-    val r = Checkpoint.resume(spark, input, "doc_id", transform, out, buckets = 8)
-    assert(r.unitsSkipped == atThrow.toSeq.sorted)
-    assert(r.unitsCommitted == (0 until 8).filterNot(atThrow))
-    val fresh = Files.createTempDirectory("ckpt_parfail_ref").toString
-    Checkpoint.resume(spark, input, "doc_id", transform, fresh, buckets = 8)
-    val a = Checkpoint.readCommitted(spark, out)
-      .select("doc_id", "n").collect().map(_.toString).sorted.toSeq
-    val b = Checkpoint.readCommitted(spark, fresh)
-      .select("doc_id", "n").collect().map(_.toString).sorted.toSeq
-    assert(a == b && a.size == 1000)
-  }
-
   test("manifest JSON round-trips a key column named with quote and backslash") {
     val key = "we\"ird\\key"
     val keyed = input.withColumnRenamed("doc_id", key)
     val t: DataFrame => DataFrame =
-      df => df.select(col(key), length(col("text")).as("n"))
+      df => df.select(col(key), length(col("text")).as("n"), col("part_bucket"))
     val out = Files.createTempDirectory("ckpt_json").toString
     Checkpoint.resume(spark, keyed, key, t, out, buckets = 4)
     val ms = Checkpoint.readManifests(out)
@@ -291,7 +258,7 @@ class ResumeSpec extends AnyFunSuite {
       val out = Files.createTempDirectory(s"ckpt_obs_$name").toString
       Checkpoint.resume(spark, input, "doc_id", t, out, buckets = 4)
       val ms = Checkpoint.readManifests(out)
-      val schema = t(input).schema
+      val schema = t(input.withColumn("part_bucket", lit(0))).drop("part_bucket").schema
       for (m <- ms) {
         val readBack = spark.read.schema(schema)
           .parquet(s"$out/data/part_bucket=${m.bucket}").count()
@@ -308,15 +275,15 @@ class ResumeSpec extends AnyFunSuite {
     }
   }
 
-  test("concurrent units run under the caller's job group") {
+  test("the transform job runs under the caller's job group") {
     val group = "resume-caller-group"
     val groupOf = udf(() =>
       org.apache.spark.TaskContext.get.getLocalProperty("spark.jobGroup.id")).asNondeterministic()
     val out = Files.createTempDirectory("ckpt_group").toString
-    spark.sparkContext.setJobGroup(group, "concurrent units")
+    spark.sparkContext.setJobGroup(group, "transform job")
     try Checkpoint.resume(spark, input, "doc_id",
-      df => df.select(col("doc_id"), groupOf().as("grp")), out,
-      buckets = 8, unitParallelism = 4)
+      df => df.select(col("doc_id"), groupOf().as("grp"), col("part_bucket")), out,
+      buckets = 8)
     finally spark.sparkContext.clearJobGroup()
     val groups = Checkpoint.readCommitted(spark, out)
       .groupBy("grp").count().collect().map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -361,6 +328,109 @@ class ResumeSpec extends AnyFunSuite {
     }
     assert(Checkpoint.recordedKeyCols(out).isEmpty)
     assert(Checkpoint.validateCommitted(spark, input, "text", out, 4).isEmpty)
+    // bucket counts follow the same rule: another count refuses, and
+    // manifests that predate bucket-count recording skip the check
+    val eCount = intercept[Checkpoint.KeyingMismatch] {
+      Checkpoint.validateCommitted(spark, input, "text", out, buckets = 8)
+    }
+    assert(eCount.getMessage.contains("4 buckets"))
+    Files.list(mdir).iterator().forEachRemaining { p =>
+      Files.writeString(p, Files.readString(p).replaceAll(""","buckets":[0-9]+""", ""))
+    }
+    assert(Checkpoint.readManifests(out).forall(_.buckets == 0))
+    Checkpoint.validateCommitted(spark, input, "text", out, buckets = 8)
+  }
+
+  test("a transform that drops part_bucket is refused as not bucket-local") {
+    val out = Files.createTempDirectory("ckpt_local").toString
+    val e = intercept[IllegalArgumentException] {
+      Checkpoint.resume(spark, input, "doc_id", df => df.select(col("doc_id")), out, buckets = 4)
+    }
+    assert(e.getMessage.contains("bucket-local"), e.getMessage)
+    assert(Checkpoint.committedUnits(out).isEmpty)
+  }
+
+  test("a SIGKILLed CLI run resumes to a fresh run's table (forked JVM)") {
+    // one child JVM runs the verb and is killed (SIGKILL, no shutdown
+    // hooks) as soon as the first manifest seals; wherever the kill lands
+    // (in the commit loop, or after the run), the rerun must keep every
+    // sealed unit untouched and recompute exactly the rest
+    val root = Files.createTempDirectory("ckpt_kill")
+    val out = root.resolve("t")
+    val opts = Map("synth" -> "3000", "out" -> out.toString, "buckets" -> "32")
+    val cmd = Seq(java.nio.file.Paths.get(System.getProperty("java.home"), "bin", "java").toString) ++
+      java.lang.management.ManagementFactory.getRuntimeMXBean.getInputArguments.asScala
+        .filter(_.startsWith("--add-opens")) ++
+      Seq("-Xmx1g", "-cp", System.getProperty("java.class.path"), "graft.cli.Main", "categories") ++
+      opts.toSeq.flatMap { case (k, v) => Seq(s"--$k", v) }
+    val log = root.resolve("child.log").toFile
+    val pb = new ProcessBuilder(cmd: _*)
+      .redirectOutput(ProcessBuilder.Redirect.DISCARD)
+      .redirectError(log)
+    pb.environment().put("SPARK_GRAFT_CPUS", "2")
+    val child = pb.start()
+    val aliveAtKill =
+      try {
+        val deadline = System.nanoTime() + 300L * 1000000000L
+        while (child.isAlive && Checkpoint.committedUnits(out.toString).isEmpty &&
+          System.nanoTime() < deadline) Thread.sleep(1)
+        child.isAlive
+      } finally {
+        child.destroyForcibly()
+        child.waitFor()
+      }
+    val sealedAtKill = Checkpoint.committedUnits(out.toString).size
+    def childLog = new String(Files.readAllBytes(log.toPath), "UTF-8").takeRight(2000)
+    assert(aliveAtKill || child.exitValue == 0, s"child failed before the kill:\n$childLog")
+    assert(sealedAtKill > 0 || !aliveAtKill, s"no unit sealed within the deadline:\n$childLog")
+    info(s"kill landed with $sealedAtKill of 32 units sealed" +
+      (if (aliveAtKill) "" else " (the child had already exited)"))
+    // every manifest sealed before the kill: its bytes and its file
+    def manifests(): Map[String, (Seq[Byte], AnyRef)] = {
+      val dir = out.resolve("_manifest")
+      if (!Files.isDirectory(dir)) Map.empty
+      else {
+        val ls = Files.list(dir)
+        try ls.iterator().asScala.filter(_.getFileName.toString.startsWith("part-")).map { p =>
+          p.getFileName.toString -> ((Files.readAllBytes(p).toSeq,
+            Files.readAttributes(p, classOf[java.nio.file.attribute.BasicFileAttributes]).fileKey))
+        }.toMap
+        finally ls.close()
+      }
+    }
+    val before = manifests()
+    assert(before.size == sealedAtKill)
+
+    def runVerb(o: Map[String, String]): String = {
+      val buf = new java.io.ByteArrayOutputStream()
+      Console.withOut(new java.io.PrintStream(buf, true, "UTF-8")) {
+        graft.cli.Main.run(spark, "categories", o)
+      }
+      buf.toString("UTF-8")
+    }
+    val resumedStdout = runVerb(opts)
+    val after = manifests()
+    assert(after.size == 32)
+    for ((name, (bytes, _)) <- before)
+      assert(after(name)._1 == bytes, s"$name changed across the resume")
+    // a skipped unit's manifest is the same file; a recomputed unit's seal
+    // renamed a new file into place
+    val unitsSkipped = after.collect { case (n, (_, key)) if before.get(n).exists(_._2 == key) => n }
+    assert(unitsSkipped.toSet == before.keySet)
+
+    val sp = spark
+    val (classified, release) = graft.cli.Main.classifySteadyState(sp,
+      graft.synth.Synth.corpus(sp, 42L, 3000L), persistClassified = false)
+    try assert(Checkpoint.validateCommitted(spark, classified.toDF().select("doc_id"),
+      "doc_id", out.toString, 32) == Nil)
+    finally release()
+
+    val fresh = root.resolve("fresh").toString
+    val freshStdout = runVerb(opts + ("out" -> fresh))
+    assert(resumedStdout == freshStdout)
+    def rows(dir: String) = Checkpoint.readCommitted(spark, dir).collect().map(_.toString).sorted.toSeq
+    assert(rows(out.toString) == rows(fresh))
+    assert(!Files.exists(out.resolve("_staged")) && !Files.exists(out.resolve("_output")))
   }
 }
 

@@ -7,6 +7,7 @@ import graft.threads.Threads
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** `top`'s Spark shape: the one-scan ranking and the one-job DF counter
   * against their former forms, and the verb's job count and cache set.
@@ -137,16 +138,29 @@ class TopJobsSpec extends AnyFunSuite {
   }
 
   test("categories and top with --out: Spark jobs on a first run and on a rerun") {
+    // the transform runs once per call and units commit by directory
+    // moves, so the job counts do not depend on --buckets
     Classify.dictsBroadcast(spark)
-    Seq("categories" -> (9, 2), "top" -> (20, 6)).foreach { case (verb, (first, rerun)) =>
-      val out = java.nio.file.Files.createTempDirectory(s"$verb-out").toString
-      val opts = Map("synth" -> "2000", "out" -> out, "buckets" -> "4")
+    Seq("categories" -> (6, 2), "top" -> (11, 6)).foreach { case (verb, (first, rerun)) =>
       val plain = JobProbe(spark, s"$verb-plain")(graft.cli.Main.run(spark, verb, Map("synth" -> "2000")))
-      val r1 = JobProbe(spark, s"$verb-out-first")(graft.cli.Main.run(spark, verb, opts))
-      val r2 = JobProbe(spark, s"$verb-out-rerun")(graft.cli.Main.run(spark, verb, opts))
-      assert(r1.stdout == plain.stdout, verb)
-      assert(r2.stdout == plain.stdout, verb)
-      assert((r1.jobs, r2.jobs) == ((first, rerun)), s"$verb: Spark jobs (first run, rerun)")
+      val jobs = Seq(4, 16).map { buckets =>
+        val out = java.nio.file.Files.createTempDirectory(s"$verb-out").toString
+        val opts = Map("synth" -> "2000", "out" -> out, "buckets" -> buckets.toString)
+        val r1 = JobProbe(spark, s"$verb-out-first")(graft.cli.Main.run(spark, verb, opts))
+        val r2 = JobProbe(spark, s"$verb-out-rerun")(graft.cli.Main.run(spark, verb, opts))
+        assert(r1.stdout == plain.stdout, verb)
+        assert(r2.stdout == plain.stdout, verb)
+        if (verb == "top") // one data file per non-empty unit
+          for (m <- graft.tablefmt.Checkpoint.readManifests(out)) {
+            val ls = java.nio.file.Files.list(java.nio.file.Paths.get(out, "data", s"part_bucket=${m.bucket}"))
+            val files = try ls.iterator().asScala.count(_.getFileName.toString.endsWith(".parquet"))
+              finally ls.close()
+            assert(files == (if (m.nOutput > 0) 1 else 0), s"top --buckets $buckets unit ${m.bucket}")
+          }
+        buckets -> ((r1.jobs, r2.jobs))
+      }.toMap
+      assert(jobs == Map(4 -> ((first, rerun)), 16 -> ((first, rerun))),
+        s"$verb: Spark jobs (first run, rerun) by --buckets")
     }
   }
 }
