@@ -18,7 +18,9 @@ import org.apache.spark.sql.functions._
   * }}}
   *
   * With --out, results are written as a checkpointed table (resumable,
-  * per-unit lineage — see [[graft.tablefmt.Checkpoint]]). The JSON frames
+  * per-unit lineage — see [[graft.tablefmt.Checkpoint]]) split into
+  * `--buckets` commit units: by default the count an existing table's
+  * manifests record, else 16. The JSON frames
   * printed to stdout mirror the reference's printers (src/printer.rs:6-62,
   * src/nlu/glossary.rs:218-278) from a driver-side collect CAPPED at
   * `MaxCliRows` — the stdout path is a CLI-compat shim, the table write is
@@ -206,15 +208,15 @@ object Main {
     * The extraction is ALWAYS persisted: the IDF pass and the classify
     * pass both read it. `classified` is persisted only when
     * `persistClassified` is set, which a caller does when it reads it
-    * more than once: with `--out` (table write plus stdout), with
-    * `--fuzzy true` (the fuzzy keying reads it twice) and in `debug`
-    * (which counts it before listing it). A plain `top`/`threads`/`news`/
-    * `categories` reads it once, and a cache there only costs an extra
-    * job and a columnar build of the entities map.
+    * more than once: with `--out` (table write plus stdout) and with
+    * `--fuzzy true` (the fuzzy keying reads it twice). A plain `top`/
+    * `threads`/`news`/`categories` and `debug` read it once, and a cache
+    * there only costs an extra job and a columnar build of the entities
+    * map.
     *
-    * This is the ONE classify steady state: the verbs, the
-    * `ScalingBench` pipeline stage and PipelineSpec's one-scan tests all
-    * call it.
+    * This is the ONE classify steady state: the verbs (and through
+    * them the `ScalingBench` pipeline stage) and PipelineSpec's one-scan
+    * tests all call it.
     */
   private[graft] def classifySteadyState(spark: SparkSession, docs: Dataset[Doc],
       persistClassified: Boolean): (Dataset[graft.model.ClassifiedDoc], () => Unit) = {
@@ -238,7 +240,14 @@ object Main {
   def run(spark: SparkSession, verb: String, opts: Map[String, String]): Unit = {
     import spark.implicits._
     val docs = inputDocs(spark, opts)
-    val buckets = longOpt(opts, "buckets", 16L, min = 1L, max = 1000000L).toInt
+    // an explicit --buckets wins; without it a table with sealed units
+    // keeps the count its manifests record (another count re-slices the
+    // committed rows, which the sink refuses), and a new table gets 16
+    val buckets =
+      if (opts.contains("buckets")) longOpt(opts, "buckets", 16L, min = 1L, max = 1000000L).toInt
+      else opts.get("out")
+        .flatMap(out => Checkpoint.readManifests(out).map(_.buckets).find(_ > 0))
+        .getOrElse(16)
 
     // Checkpointed sink: commit units slice the INPUT by key hash, and the
     // bucket-local transform runs once over the uncommitted slices —
@@ -343,20 +352,32 @@ object Main {
         val t0 = System.nanoTime()
         val nInput = docs.count()
         val t1 = System.nanoTime()
+        // classified is read once by the counters (and again only by the
+        // opt-in audit), so it is not persisted
         val (classified, release) =
-          classifySteadyState(spark, docs, persistClassified = true)
+          classifySteadyState(spark, docs, persistClassified = false)
         try {
-          val nKept = classified.count()
+          // extract_classify_ms covers the extraction and IDF job; the
+          // classify kernel runs fused into the counters' pass below
           val t2 = System.nanoTime()
-          val byLang = classified.groupByKey(_.lang).count().collect().toMap
-          val nNews = classified.filter(_.is_news).count()
-          val nTitles = classified.map(_.title_norm).distinct().count()
-          val nThreads = Threads.threads(classified).count()
+          // every counter from ONE pass: a row per title, then totals
+          // over those rows. A thread is a title with at least 2 docs —
+          // exactly the rows Threads.threads keeps
+          val perTitle = classified.toDF().groupBy(col("title_norm")).agg(
+            count(lit(1)).as("n"),
+            count(when(col("lang") === "en", 1)).as("n_en"),
+            count(when(col("lang") === "ru", 1)).as("n_ru"),
+            count(when(col("is_news"), 1)).as("n_news"))
+          def total(c: String) = coalesce(sum(col(c)), lit(0L))
+          val (nKept, nEn, nRu, nNews, nTitles, nThreads) = perTitle
+            .agg(total("n"), total("n_en"), total("n_ru"), total("n_news"),
+              count(lit(1)), count(when(col("n") >= 2, 1)))
+            .as[(Long, Long, Long, Long, Long, Long)].head()
           val t3 = System.nanoTime()
           def ms(a: Long, b: Long) = (b - a) / 1000000
           println(
-            s"""{"n_input": $nInput, "n_kept": $nKept, "n_en": ${byLang.getOrElse("en", 0L)}, """ +
-            s""""n_ru": ${byLang.getOrElse("ru", 0L)}, "n_news": $nNews, """ +
+            s"""{"n_input": $nInput, "n_kept": $nKept, "n_en": $nEn, """ +
+            s""""n_ru": $nRu, "n_news": $nNews, """ +
             s""""n_distinct_titles": $nTitles, "n_threads": $nThreads, """ +
             s""""scan_ms": ${ms(t0, t1)}, "extract_classify_ms": ${ms(t1, t2)}, """ +
             s""""threads_ms": ${ms(t2, t3)}}""")

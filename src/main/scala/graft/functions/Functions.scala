@@ -349,6 +349,15 @@ object GraftFunctions {
     GraftColumnBridge.column(NormTitle(GraftColumnBridge.expression(c)))
   def simhash64_title(c: Column): Column =
     GraftColumnBridge.column(SimHash64Title(GraftColumnBridge.expression(c)))
+  /** Cosine similarity with the exact semantics of the typed kernel
+    * (`Similarity.dotNorm`): floats widened to double BEFORE multiplying,
+    * left-to-right double accumulation, and zero-norm vectors scoring 0.0
+    * instead of NaN (NaN sorts above every sim in a rank window — a zero
+    * vector would otherwise corrupt top-k order). Bitwise-identical to
+    * the cast-to-double zip_with/aggregate form that [[CosineSim]]
+    * replaced (SimilaritySpec pins equality incl. zero vectors), so the
+    * DuckDB ANN oracles are untouched.
+    */
   def cosine_sim(a: Column, b: Column): Column =
     GraftColumnBridge.column(CosineSim(
       GraftColumnBridge.expression(a), GraftColumnBridge.expression(b)))

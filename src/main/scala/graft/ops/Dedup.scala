@@ -8,14 +8,12 @@ import org.apache.spark.sql.functions._
   * components (a pair (a,b) and a pair (b,c) must merge into {a,b,c} even
   * if (a,c) never surfaced in any LSH bucket).
   *
-  * Algorithm: min-label propagation — every node repeatedly adopts the
-  * smallest label among itself and its neighbors, until a fixed point.
-  * Each round is one join + one groupBy (both on uniformly-hashed ids, so
-  * balanced); rounds needed = graph diameter, which for near-dup graphs
-  * is tiny (dup clusters are dense cliques-ish, diameter ≤ ~3). A
-  * convergence count() gates each round — O(diameter) actions total.
-  * This is the two-join core of the large-star/small-star CC family
-  * (Kiveris et al.), simplified for small-diameter dup graphs.
+  * Algorithm ([[connectedComponentsAuto]]): verified near-dup graphs are
+  * small next to the corpus, so up to a threshold the edges are collected
+  * and merged by a union-find on the driver; above it the distributed
+  * large-star/small-star rounds of Kiveris et al. run instead
+  * ([[connectedComponentsStar]]). Both label each node with the minimum
+  * id of its component.
   */
 object Dedup {
 
@@ -53,48 +51,10 @@ object Dedup {
         graft.functions.MinK.min_k(col(idCol), sampleK).as(idsAs))
       .filter(col(nAs) >= 2)
 
-  /** @param pairs (a, b) candidate edges, any orientation, dups ok
-    * @return (member, component) — component = min member id
-    */
-  def connectedComponents(pairs: DataFrame, maxIters: Int = 10): DataFrame = {
-    val spark = pairs.sparkSession
-    val edges = pairs.toDF("a", "b")
-      .union(pairs.toDF("b", "a").select(col("a"), col("b")))
-      .distinct()
-      .cache()
-    // labels: node → current component label (start: itself)
-    // localCheckpoint per round truncates lineage — without it the nested
-    // plan grows exponentially with iterations (explain/codegen OOM)
-    var labels = edges.select(col("a").as("node")).distinct()
-      .withColumn("label", col("node"))
-      .transform(graft.tablefmt.LineageCut.cut)
-    var converged = false
-    var it = 0
-    while (!converged && it < maxIters) {
-      // each node adopts min(own label, neighbors' labels)
-      val viaNeighbors = edges
-        .join(labels.withColumnRenamed("node", "b2").withColumnRenamed("label", "nlabel"),
-          col("b") === col("b2"))
-        .groupBy(col("a").as("node"))
-        .agg(min(col("nlabel")).as("minNeighbor"))
-      val next = labels.join(viaNeighbors, Seq("node"), "left")
-        .select(col("node"),
-          least(col("label"), coalesce(col("minNeighbor"), col("label"))).as("label"))
-        .transform(graft.tablefmt.LineageCut.cut)
-      val changed = next.join(labels.withColumnRenamed("label", "old"), "node")
-        .filter(col("label") =!= col("old")).limit(1).count()
-      labels = next
-      converged = changed == 0
-      it += 1
-    }
-    edges.unpersist()
-    labels.select(col("node").as("member"), col("label").as("component"))
-  }
-
   /** Connected components via alternating large-star / small-star
     * (Kiveris et al., "Connected Components in MapReduce and Beyond") —
-    * O(log² n) rounds on ANY graph shape, vs. diameter rounds for
-    * [[connectedComponents]]'s label propagation. Each round is two
+    * O(log² n) rounds on ANY graph shape, where min-label propagation
+    * needs as many rounds as the graph's diameter. Each round is two
     * edge-relabeling join-free aggregations; edges monotonically point
     * toward component minima until fixed point.
     *
@@ -205,9 +165,9 @@ object Dedup {
   }
 
   /** Verified near-dup edges (a, b): anchor-star LSH candidates →
-    * exact-Jaccard filter. Shared by [[nearDupGroups]] and by Verify's
-    * external oracle (which recomputes the CC tail in DuckDB via a
-    * recursive CTE over this table).
+    * exact-Jaccard filter. Shared by [[groupsFromPairs]], [[keepFromPairs]]
+    * and Verify's external oracle (which recomputes the CC tail in DuckDB
+    * via a recursive CTE over this table).
     */
   def nearDupPairs(docs: DataFrame, shingleN: Int = 3,
                    minJaccard: Double = 0.5): DataFrame = {
@@ -225,16 +185,11 @@ object Dedup {
   /** The corpus-curation deliverable: the documents table MINUS near-dup
     * redundancy — one representative (the min doc_id) kept per connected
     * near-dup component, every other member dropped, all non-duplicated
-    * docs kept. Returns the kept doc_ids.
-    */
-  def nearDupKeep(docs: DataFrame, shingleN: Int = 3,
-                  minJaccard: Double = 0.5): DataFrame =
-    keepFromPairs(docs, nearDupPairs(docs, shingleN, minJaccard))
-
-  /** The curation tail over an already-computed verified-pair set — split
-    * out so a session computing BOTH the group listing and the curated
-    * corpus (SparkEntry memoizes the pair table per session) runs the
-    * LSH+verify pipeline once, not once per consumer.
+    * docs kept. Returns the kept doc_ids. It takes an already-computed
+    * verified-pair set ([[nearDupPairs]]), so a session computing BOTH the
+    * group listing and the curated corpus (SparkEntry memoizes the pair
+    * table per session) runs the LSH+verify pipeline once, not once per
+    * consumer.
     *
     * Join-strategy CONTRACT (VERDICT r7 item 4): the anti-join strategy
     * is deliberately left to AQE — no broadcast hint — because the drop
@@ -258,15 +213,9 @@ object Dedup {
       .select(col("doc_id"))
   }
 
-  /** Full near-dup pipeline: LSH candidates → Jaccard verify →
-    * connected components → groups with sizes + bounded member sample.
-    */
-  def nearDupGroups(docs: DataFrame, shingleN: Int = 3, minJaccard: Double = 0.5,
-                    sampleK: Int = 10): DataFrame =
-    groupsFromPairs(nearDupPairs(docs, shingleN, minJaccard), sampleK)
-
-  /** The group-listing tail over an already-computed verified-pair set
-    * (see [[keepFromPairs]]).
+  /** Near-dup groups over an already-computed verified-pair set (see
+    * [[keepFromPairs]]): connected components → groups with sizes + a
+    * bounded member sample.
     */
   def groupsFromPairs(pairs: DataFrame, sampleK: Int = 10): DataFrame =
     // hybrid CC: driver union-find for small candidate graphs,

@@ -13,8 +13,7 @@ import org.apache.spark.sql.functions._
   * [[parseImageMeta]] / [[parseWav]] / [[parseMp4]] decode width/height/
   * sample-rate/frames/duration from the BYTES — plain-JDK header parses,
   * no codec needed. Only full pixel/sample/frame DECODE remains
-  * environment-blocked ([[decodeStub]] survives solely as the resize
-  * stub's fallback). The Spark-side plumbing — schema, batching,
+  * environment-blocked. The Spark-side plumbing — schema, batching,
   * partitioning, output shape — is real throughout.
   */
 object Multimodal {
@@ -30,19 +29,6 @@ object Multimodal {
     var i = 0
     while (i < bytes.length) { h ^= (bytes(i) & 0xff).toLong; h *= 0x100000001b3L; i += 1 }
     h
-  }
-
-  /** STUB decode — now only the [[resizeStub]] fallback for payloads no
-    * header parser understands (metadata extraction is fully parsed, see
-    * object doc): pure function of the payload so tests stay
-    * deterministic.
-    */
-  def decodeStub(kind: String, payload: Array[Byte]): (Int, Int, Int) = {
-    val h = checksum(payload)
-    val w = 64 + ((h >>> 8) % 1024).toInt.abs
-    val ht = 64 + ((h >>> 24) % 1024).toInt.abs
-    val frames = if (kind == "video") 1 + ((h >>> 40) % 300).toInt.abs else 1
-    (w, ht, frames)
   }
 
   // ---- format-true image byte synthesis -----------------------------
@@ -440,36 +426,6 @@ object Multimodal {
       }
       MediaMeta(row.doc_id, row.kind, row.payload.length,
         checksum(row.payload), w, h, f, rate, durMs)
-    })
-  }
-
-  final case class ResizedMedia(doc_id: Long, kind: String, width: Int,
-                                height: Int, payload: Array[Byte])
-
-  /** Resize-shaped pass: binary in → binary out, batched per partition —
-    * the executor-memory-bounded shape of a real thumbnailer. The pixel
-    * work is the deterministic STUB (no codecs in this sandbox): output
-    * payload = truncated input + an 8-byte header derived from the target
-    * box, so tests can assert size/metadata behavior.
-    */
-  def resizeStub(media: Dataset[MediaRow], maxW: Int, maxH: Int): Dataset[ResizedMedia] = {
-    import media.sparkSession.implicits._
-    media.mapPartitions(_.map { row =>
-      val (w, h) =
-        (row.kind match {
-          case "image" => parseImageMeta(row.payload)
-          case "video" => parseMp4(row.payload).map(m => (m._1, m._2))
-          case _       => None
-        }).getOrElse { val s = decodeStub(row.kind, row.payload); (s._1, s._2) }
-      val scale = math.min(1.0, math.min(maxW.toDouble / w, maxH.toDouble / h))
-      val (nw, nh) = (math.max(1, (w * scale).toInt), math.max(1, (h * scale).toInt))
-      val outLen = math.max(8, (row.payload.length * scale * scale).toInt)
-      val out = new Array[Byte](outLen)
-      out(0) = (nw >> 8).toByte; out(1) = nw.toByte
-      out(2) = (nh >> 8).toByte; out(3) = nh.toByte
-      System.arraycopy(row.payload, 0, out, 8,
-        math.min(row.payload.length, outLen - 8))
-      ResizedMedia(row.doc_id, row.kind, nw, nh, out)
     })
   }
 

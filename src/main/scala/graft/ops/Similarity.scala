@@ -131,7 +131,7 @@ object Similarity {
     cand
       .join(corpus.select(col("vec_id"), col("embedding")), "vec_id")
       .join(broadcast(qs), "q_id")
-      .withColumn("sim", cosineExprSafe(col("q_emb"), col("embedding")))
+      .withColumn("sim", graft.functions.GraftFunctions.cosine_sim(col("q_emb"), col("embedding")))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .select("q_id", "vec_id", "sim", "rank")
@@ -188,39 +188,11 @@ object Similarity {
     val w = Window.partitionBy(col("q_id"))
       .orderBy(col("sim").desc, col("vec_id"))
     cs.join(broadcast(qs), "bucket") // query side is small → broadcast hash join per bucket
-      .withColumn("sim", cosineExprSafe(col("q_emb"), col("embedding")))
+      .withColumn("sim", graft.functions.GraftFunctions.cosine_sim(col("q_emb"), col("embedding")))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .select("q_id", "vec_id", "sim", "rank")
   }
-
-  /** Column-expression cosine similarity via zip_with + aggregate — the
-    * pure-SQL twin of the kernel dot product (usable from spark.sql, no
-    * UDF registration; the typed kernels remain the hot path).
-    */
-  def cosineExpr(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    def dot(x: org.apache.spark.sql.Column, y: org.apache.spark.sql.Column) =
-      aggregate(zip_with(x, y, (p, q) => p * q), lit(0.0d), (acc, v) => acc + v)
-    dot(a, b) / sqrt(dot(a, a) * dot(b, b))
-  }
-
-  /** [[cosineExpr]] with the [[dotNorm]] kernel's exact semantics: floats
-    * widened to double BEFORE multiplying and zero-norm vectors scoring
-    * 0.0 instead of NaN (NaN sorts above every sim in a rank window —
-    * a zero vector would otherwise corrupt top-k order).
-    *
-    * r7: now the NATIVE codegen expression `graft.functions.CosineSim`
-    * (one JIT-compiled primitive loop per row). The previous zip_with+
-    * aggregate form allocated two cast-to-double arrays plus three
-    * zip_with intermediates and ran interpreted lambdas per element —
-    * measured as the dominant per-candidate cost of every ANN query
-    * (sf1: ann_ivf_topk 16.4 s → see BENCH/BASELINE.md r7). Result is
-    * bitwise-identical (same left-to-right double accumulation, same
-    * zero-norm rule — SimilaritySpec pins equality incl. zero vectors),
-    * so the DuckDB ANN oracles are untouched.
-    */
-  def cosineExprSafe(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    graft.functions.GraftFunctions.cosine_sim(a, b)
 
   /** IVF (inverted-file) ANN: coarse k-means centroids partition the
     * corpus; a query probes only its `nProbe` nearest centroids' lists.
@@ -345,33 +317,12 @@ object Similarity {
     val w = Window.partitionBy(col("q_id"))
       .orderBy(col("sim").desc, col("vec_id"))
     assigned.join(broadcast(probes), "cid")
-      .withColumn("sim", cosineExprSafe(col("q_emb"), col("embedding")))
+      .withColumn("sim", graft.functions.GraftFunctions.cosine_sim(col("q_emb"), col("embedding")))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .select("q_id", "vec_id", "sim", "rank")
   }
 
-  /** IVF search: assign corpus once, probe `nProbe` centroid lists. */
-  def ivfTopK(spark: SparkSession, corpus: DataFrame, queries: DataFrame,
-              k: Int, nCentroids: Int = 16, nProbe: Int = 2,
-              iters: Int = 3, seed: Long = 42L): DataFrame = {
-    val (assigned, probes) =
-      ivfAssignProbes(spark, corpus, queries, nCentroids, nProbe, iters, seed)
-    ivfSearch(assigned, probes, k)
-  }
-
-  /** Embedding-cosine near-duplicate PAIRS, scale-safe: `bands`
-    * independent sign-LSH signatures (bitsPerBand bits each, seeded per
-    * band) bucket the corpus `bands` times; each (band, sig) bucket
-    * contributes (anchor = min vec_id, other) STAR pairs — O(bucket size)
-    * candidates and O(1) aggregation state, mirroring
-    * [[Sketches.minhashCandidatePairs]]. The round-1 within-bucket
-    * self-join grew O(n²/2^nBits) with corpus size and any degenerate
-    * embedding cluster (e.g. many identical vectors) was a hot-bucket
-    * bomb; star pairs + connected components ([[cosineDupGroups]]) keep
-    * the same dup groups with linear candidate volume. Candidates are
-    * verified by exact cosine ≥ `minSim`.
-    */
   /** (vec_id, sig) single sign-LSH signature at `nBits` — the same planes
     * the lshBucketTopK/lshMultiProbeTopK paths hash with (pure function
     * of (dim, nBits, seed)); public for Verify's oracle base dump.
@@ -407,6 +358,18 @@ object Similarity {
       .select(col("vec_id"), posexplode(array(perBand.toIndexedSeq: _*)).as(Seq("band", "sig")))
   }
 
+  /** Embedding-cosine near-duplicate PAIRS, scale-safe: `bands`
+    * independent sign-LSH signatures (bitsPerBand bits each, seeded per
+    * band) bucket the corpus `bands` times; each (band, sig) bucket
+    * contributes (anchor = min vec_id, other) STAR pairs — O(bucket size)
+    * candidates and O(1) aggregation state, mirroring
+    * [[Sketches.minhashCandidatePairs]]. The round-1 within-bucket
+    * self-join grew O(n²/2^nBits) with corpus size and any degenerate
+    * embedding cluster (e.g. many identical vectors) was a hot-bucket
+    * bomb; star pairs keep the same dup groups (their connected
+    * components) with linear candidate volume. Candidates are
+    * verified by exact cosine ≥ `minSim`.
+    */
   def cosineDupPairs(spark: SparkSession, corpus: DataFrame, minSim: Double,
                      bands: Int = 4, bitsPerBand: Int = 8,
                      seed: Long = 42L): DataFrame = {
@@ -422,26 +385,8 @@ object Similarity {
     cand
       .join(emb.select(col("vec_id").as("id_a"), col("embedding").as("emb_a")), "id_a")
       .join(emb.select(col("vec_id").as("id_b"), col("embedding").as("emb_b")), "id_b")
-      .withColumn("sim", cosineExprSafe(col("emb_a"), col("emb_b")))
+      .withColumn("sim", graft.functions.GraftFunctions.cosine_sim(col("emb_a"), col("emb_b")))
       .filter(col("sim") >= minSim)
       .select(col("id_a"), col("id_b"), col("sim"))
-  }
-
-  /** Transitive closure of [[cosineDupPairs]]: connected components over
-    * the verified pairs → (component, n_members) dup groups — the
-    * embedding-space analogue of minhash dedup groups, and the form whose
-    * result is comparable to an all-pairs threshold join (a star pair set
-    * has the same components as the full within-threshold pair set when
-    * buckets capture the duplicates; SimilaritySpec asserts equality to
-    * the brute-force closure on planted dups).
-    */
-  def cosineDupGroups(spark: SparkSession, corpus: DataFrame, minSim: Double,
-                      bands: Int = 4, bitsPerBand: Int = 8,
-                      seed: Long = 42L): DataFrame = {
-    val pairs = cosineDupPairs(spark, corpus, minSim, bands, bitsPerBand, seed)
-      .select(col("id_a").as("a"), col("id_b").as("b"))
-    Dedup.connectedComponentsAuto(pairs) // every node incl. roots → (member, component)
-      .groupBy(col("component"))
-      .agg(count(lit(1)).as("n_members"))
   }
 }

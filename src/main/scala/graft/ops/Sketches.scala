@@ -210,7 +210,8 @@ object Sketches {
     * groupBy + join-back planned two exchanges and SMJ sorts on both
     * sides — interleaved A/Bs: 1.06M titles 1.80-3.60 → 1.46-2.47 s
     * (identical 192,178 pairs), sf1 documents end-to-end through
-    * nearDupGroups 5.17-5.84 → 4.20-4.73 s (identical 4,756 groups).
+    * doc_neardup_groups (`Dedup.nearDupPairs` → `groupsFromPairs`)
+    * 5.17-5.84 → 4.20-4.73 s (identical 4,756 groups).
     * Hot-bucket note: WindowExec buffers one bucket group at a time
     * (spilling via UnsafeExternalSorter) where SMJ streamed it —
     * acceptable: anchor-star output is O(bucket) there regardless, and

@@ -24,15 +24,13 @@ import org.apache.spark.sql.functions._
   */
 object HtmlDirSource {
 
-  def read(spark: SparkSession, dir: String,
-           glob: String = ""): Dataset[Doc] = {
+  def read(spark: SparkSession, dir: String): Dataset[Doc] = {
     import spark.implicits._
-    // no default glob: the reference parses every file regardless of
+    // no file-name filter: the reference parses every file regardless of
     // extension (visit_dirs, src/parser.rs:90-103) — contest corpora use
-    // bare file names; pass a glob only to opt in to filtering
-    val reader = spark.read.format("binaryFile")
+    // bare file names
+    val files = spark.read.format("binaryFile")
       .option("recursiveFileLookup", "true")
-    val files = (if (glob.nonEmpty) reader.option("pathGlobFilter", glob) else reader)
       .load(dir)
     val scan = files.select(col("path"), col("content"))
     // the listed files' total length (the relation's size estimate),

@@ -111,12 +111,6 @@ object Checkpoint {
     (ms.size, ms.map(_.keyCol).filter(_.nonEmpty).toSet)
   }
 
-  /** The key column the table's committed units were bucketed by, when
-    * recorded (r7+ manifests). Empty set = no committed units or pre-r7
-    * manifests.
-    */
-  def recordedKeyCols(out: String): Set[String] = recordedKeying(out)._2
-
   /** A fingerprint audit or a resume against a table whose committed
     * units were bucketed by a DIFFERENT key or into a DIFFERENT number of
     * buckets is meaningless (the slices differ) — fail with the real story

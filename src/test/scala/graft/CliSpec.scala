@@ -19,12 +19,27 @@ class CliSpec extends AnyFunSuite {
 
   private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
 
-  private def runVerb(verb: String, n: Long): String = {
+  private def stdoutOf(verb: String, opts: Map[String, String]): String = {
     val buf = new java.io.ByteArrayOutputStream()
     Console.withOut(new java.io.PrintStream(buf, true, "UTF-8")) {
-      Main.run(spark, verb, Map("synth" -> n.toString))
+      Main.run(spark, verb, opts)
     }
     buf.toString("UTF-8")
+  }
+
+  private def runVerb(verb: String, n: Long): String =
+    stdoutOf(verb, Map("synth" -> n.toString))
+
+  /** Every relative path under a table, plus the bytes of every manifest. */
+  private def snapshot(out: String): Map[String, String] = {
+    val root = java.nio.file.Paths.get(out)
+    val walk = java.nio.file.Files.walk(root)
+    try walk.iterator().asScala.map { p =>
+      val rel = root.relativize(p).toString
+      rel -> (if (rel.startsWith("_manifest") && java.nio.file.Files.isRegularFile(p))
+        java.nio.file.Files.readString(p) else "")
+    }.toMap
+    finally walk.close()
   }
 
   test("malformed arguments fail fast instead of being silently dropped (VERDICT r4 item 6)") {
@@ -111,6 +126,35 @@ class CliSpec extends AnyFunSuite {
     assert(node.get("n_en").asLong == truths.count(t => t.kept && t.lang == "en"))
     assert(node.get("n_ru").asLong == truths.count(t => t.kept && t.lang == "ru"))
     assert(node.get("extract_classify_ms").asLong >= 0)
+    // the one-pass counters equal the typed actions debug used to run
+    val sp = spark
+    import sp.implicits._
+    val (classified, release) =
+      Main.classifySteadyState(spark, Synth.corpus(spark, 42L, 400L), persistClassified = true)
+    try {
+      assert(node.get("n_news").asLong == classified.filter(_.is_news).count())
+      assert(node.get("n_distinct_titles").asLong == classified.map(_.title_norm).distinct().count())
+      assert(node.get("n_threads").asLong == graft.threads.Threads.threads(classified).count())
+    } finally release()
+    assert(node.get("n_news").asLong > 0 && node.get("n_threads").asLong > 0)
+    // a corpus that keeps no document reads 0, not null
+    val dir = java.nio.file.Files.createTempDirectory("debugempty")
+    java.nio.file.Files.writeString(dir.resolve("a.html"), "<html><body><p>no title</p></body></html>")
+    val empty = mapper.readTree(stdoutOf("debug", Map("htmldir" -> dir.toString)))
+    assert(empty.get("n_input").asLong == 1L)
+    Seq("n_kept", "n_en", "n_ru", "n_news", "n_distinct_titles", "n_threads").foreach { k =>
+      assert(empty.get(k).isNumber && empty.get(k).asLong == 0L, s"$k: $empty")
+    }
+  }
+
+  test("debug --synth 2000 runs in 6 Spark jobs and caches only the extraction") {
+    val run = JobProbe(spark, "debug-job-count") {
+      Main.run(spark, "debug", Map("synth" -> "2000"))
+    }
+    assert(mapper.readTree(run.stdout).get("n_input").asLong == 2000L)
+    val names = run.cachedRddNames
+    assert(run.jobs == 6, s"Spark jobs per debug: ${run.jobs}; cached: ${names.mkString(" | ")}")
+    assert(names.size == 1 && names.head.contains("extract_title"), names.mkString(" | "))
   }
 
   test("threads: ≥2-member clusters sorted by size desc; top leads with 'any'") {
@@ -176,21 +220,10 @@ class CliSpec extends AnyFunSuite {
         Main.run(spark, "threads", opts ++ Map("out" -> out, "buckets" -> "4"))
       }
     }
-    // every relative path under $out, plus the bytes of every manifest
-    def snapshot(): Map[String, String] = {
-      val root = java.nio.file.Paths.get(out)
-      val walk = java.nio.file.Files.walk(root)
-      try walk.iterator().asScala.map { p =>
-        val rel = root.relativize(p).toString
-        rel -> (if (rel.startsWith("_manifest") && java.nio.file.Files.isRegularFile(p))
-          java.nio.file.Files.readString(p) else "")
-      }.toMap
-      finally walk.close()
-    }
     run(Map("synth" -> "300")) // commit the table
     // same input + --validate: audit passes, resume is a manifest no-op
     run(Map("synth" -> "300", "validate" -> "true"))
-    val before = snapshot()
+    val before = snapshot(out)
     // mutated input: the audit must detect the drifted committed units
     // and refuse to extend the table
     val e = intercept[Main.DriftError] {
@@ -199,7 +232,7 @@ class CliSpec extends AnyFunSuite {
     assert(e.getMessage.contains("drift") && e.getMessage.contains("buckets"))
     // the refusing run left $out FULLY untouched: no file added, removed
     // or renamed, and every manifest byte-identical
-    assert(snapshot() == before)
+    assert(snapshot(out) == before)
     // debug writes no table, but under --validate it runs the same
     // read-only audit and exits 3 on a drifted corpus (r6 review ×2)
     val eDebug = intercept[Main.DriftError] {
@@ -210,7 +243,7 @@ class CliSpec extends AnyFunSuite {
       }
     }
     assert(eDebug.getMessage.contains("drift"))
-    assert(snapshot() == before)
+    assert(snapshot(out) == before)
     // the audit blocked the write: the committed table still holds the
     // 300-doc clustering (no fresh units from the drifted input)
     val table = graft.tablefmt.Checkpoint.readCommitted(spark, out)
@@ -236,7 +269,7 @@ class CliSpec extends AnyFunSuite {
     // corpus exited 3 with a misleading drift report
     val out = java.nio.file.Files.createTempDirectory("keyedout").toString
     quiet("threads", Map("synth" -> "300", "out" -> out, "buckets" -> "4"))
-    assert(graft.tablefmt.Checkpoint.recordedKeyCols(out) == Set("title_norm"))
+    assert(graft.tablefmt.Checkpoint.recordedKeying(out)._2 == Set("title_norm"))
     // unchanged corpus: the audit now keys by the recorded title_norm and
     // passes (this threw DriftError before the fix)
     quiet("debug",
@@ -253,7 +286,7 @@ class CliSpec extends AnyFunSuite {
     val outF = java.nio.file.Files.createTempDirectory("keyedfuzzy").toString
     quiet("threads",
       Map("synth" -> "300", "fuzzy" -> "true", "out" -> outF, "buckets" -> "4"))
-    assert(graft.tablefmt.Checkpoint.recordedKeyCols(outF) == Set("component"))
+    assert(graft.tablefmt.Checkpoint.recordedKeying(outF)._2 == Set("component"))
     val eDbg = intercept[Main.CliArgError] {
       quiet("debug",
         Map("synth" -> "300", "out" -> outF, "buckets" -> "4", "validate" -> "true"))
@@ -277,7 +310,7 @@ class CliSpec extends AnyFunSuite {
       java.nio.file.Files.writeString(p, s)
     }
     assert(graft.tablefmt.Checkpoint.recordedKeying(out)._1 > 0)
-    assert(graft.tablefmt.Checkpoint.recordedKeyCols(out).isEmpty)
+    assert(graft.tablefmt.Checkpoint.recordedKeying(out)._2.isEmpty)
     val ePre = intercept[Main.CliArgError] {
       quiet("debug",
         Map("synth" -> "300", "out" -> out, "buckets" -> "4", "validate" -> "true"))
@@ -307,6 +340,22 @@ class CliSpec extends AnyFunSuite {
     val nKept = mapper.readTree(runVerb("debug", 300L)).get("n_kept").asLong
     assert(graft.tablefmt.Checkpoint.committedUnits(out) == (0 until 4).toSet)
     assert(graft.tablefmt.Checkpoint.readCommitted(spark, out).count() == nKept)
+  }
+
+  test("without --buckets, a rerun keeps the bucket count the table records") {
+    val out = java.nio.file.Files.createTempDirectory("bucketsrecorded").toString
+    stdoutOf("categories", Map("synth" -> "300", "out" -> out, "buckets" -> "4"))
+    val before = snapshot(out)
+    // the verb and the read-only audit, neither given --buckets: both
+    // take the recorded 4, commit nothing and rewrite no manifest
+    stdoutOf("categories", Map("synth" -> "300", "out" -> out))
+    stdoutOf("debug", Map("synth" -> "300", "out" -> out, "validate" -> "true"))
+    assert(snapshot(out) == before)
+    assert(graft.tablefmt.Checkpoint.committedUnits(out) == (0 until 4).toSet)
+    // a new table still defaults to 16
+    val fresh = java.nio.file.Files.createTempDirectory("bucketsdefault").toString
+    stdoutOf("categories", Map("synth" -> "300", "out" -> fresh))
+    assert(graft.tablefmt.Checkpoint.readManifests(fresh).map(_.buckets).toSet == Set(16))
   }
 
   test("golden parity: all five verbs byte-exact vs checked-in goldens") {

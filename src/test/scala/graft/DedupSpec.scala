@@ -12,46 +12,57 @@ class DedupSpec extends AnyFunSuite {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
+  /** Both paths of the production CC: the driver union-find (default
+    * threshold) and the distributed large-star/small-star rounds
+    * (`driverThreshold = 1L` forces them).
+    */
+  private def ccBothPaths(pairs: org.apache.spark.sql.DataFrame): Seq[Map[Long, Long]] = {
+    import spark.implicits._
+    Seq(Dedup.connectedComponentsAuto(pairs),
+        Dedup.connectedComponentsAuto(pairs, driverThreshold = 1L))
+      .map(_.as[(Long, Long)].collect().toMap)
+  }
+
   test("connected components merge transitive dup pairs") {
     import spark.implicits._
-    // components: {1,2,3,4} (chain), {10,11}, {20,21,22} (star), 30 isolated-by-pair-with-self? no — 30 absent
+    // components: {1,2,3,4} (chain), {10,11}, {20,21,22} (star); 30 is in no pair
     val pairs = Seq((1L,2L),(2L,3L),(3L,4L),(10L,11L),(20L,21L),(20L,22L)).toDF("a","b")
-    val got = Dedup.connectedComponents(pairs)
-      .as[(Long, Long)].collect().toMap
-    assert(got(1L) == 1L && got(2L) == 1L && got(3L) == 1L && got(4L) == 1L)
-    assert(got(10L) == 10L && got(11L) == 10L)
-    assert(got(20L) == 20L && got(21L) == 20L && got(22L) == 20L)
-    assert(!got.contains(30L))
+    ccBothPaths(pairs).foreach { got =>
+      assert(got(1L) == 1L && got(2L) == 1L && got(3L) == 1L && got(4L) == 1L)
+      assert(got(10L) == 10L && got(11L) == 10L)
+      assert(got(20L) == 20L && got(21L) == 20L && got(22L) == 20L)
+      assert(!got.contains(30L))
+    }
   }
 
   test("long chain converges (diameter > 2)") {
     import spark.implicits._
     val chain = (0L until 20L).sliding(2).map(s => (s(0), s(1))).toSeq.toDF("a","b")
-    val got = Dedup.connectedComponents(chain, maxIters = 30)
-      .as[(Long, Long)].collect().toMap
-    assert(got.values.toSet == Set(0L))
-    assert(got.size == 20)
+    ccBothPaths(chain).foreach { got =>
+      assert(got.values.toSet == Set(0L))
+      assert(got.size == 20)
+    }
   }
 
-  test("large-star/small-star CC equals label propagation on random graphs") {
+  test("driver and star CC paths equal a union-find oracle on random graphs") {
     import spark.implicits._
     val rng = new scala.util.Random(7)
     (0 until 5).foreach { _ =>
       val n = 60
       val edges = (0 until 80).map(_ => (rng.nextInt(n).toLong, rng.nextInt(n).toLong))
         .filter(e => e._1 != e._2)
-      val df = edges.toDF("a", "b")
-      val a = Dedup.connectedComponents(df, maxIters = 50)
-        .as[(Long, Long)].collect().toMap
-      val b = Dedup.connectedComponentsStar(df)
-        .as[(Long, Long)].collect().toMap
-      assert(a == b, s"mismatch for edges $edges")
-      val c = Dedup.connectedComponentsAuto(df) // driver union-find path
-        .as[(Long, Long)].collect().toMap
-      assert(c == b, s"auto mismatch for edges $edges")
-      val d = Dedup.connectedComponentsAuto(df, driverThreshold = 1L) // forced star path
-        .as[(Long, Long)].collect().toMap
-      assert(d == b)
+      // in-test oracle: union-find with the smaller root kept, so every
+      // node maps to its component's minimum id
+      val parent = scala.collection.mutable.Map[Long, Long]()
+      def find(x: Long): Long = { val p = parent.getOrElse(x, x); if (p == x) x else { val r = find(p); parent(x) = r; r } }
+      edges.foreach { case (a, b) =>
+        val (ra, rb) = (find(a), find(b))
+        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+      }
+      val want = edges.flatMap { case (a, b) => Seq(a, b) }.distinct.map(m => m -> find(m)).toMap
+      ccBothPaths(edges.toDF("a", "b")).foreach { got =>
+        assert(got == want, s"mismatch for edges $edges")
+      }
     }
   }
 
@@ -75,7 +86,7 @@ class DedupSpec extends AnyFunSuite {
     val base = "the quick brown fox jumps over the lazy dog again and again in the park tonight"
     val docs = ((1 to 50).map(i => (i.toLong, s"$base edition $i")) :+
       (100L, "entirely different content about markets and quantum budgets here")).toDF("doc_id", "text")
-    val groups = Dedup.nearDupGroups(docs, minJaccard = 0.5, sampleK = 60)
+    val groups = Dedup.groupsFromPairs(Dedup.nearDupPairs(docs, minJaccard = 0.5), sampleK = 60)
       .as[(Long, Long, Seq[Long])].collect()
     assert(groups.length == 1)
     assert(groups.head._2 == 50L, s"expected all 50 merged, got ${groups.head._2}")
@@ -90,7 +101,7 @@ class DedupSpec extends AnyFunSuite {
       (10L, "completely different words about quantum telescopes and asteroids"),
       (11L, "another unrelated piece of text mentioning markets and budgets")
     ).toDF("doc_id", "text")
-    val groups = Dedup.nearDupGroups(docs, minJaccard = 0.3)
+    val groups = Dedup.groupsFromPairs(Dedup.nearDupPairs(docs, minJaccard = 0.3))
       .as[(Long, Long, Seq[Long])].collect()
     assert(groups.length == 1)
     assert(groups.head._3.toSet == Set(1L, 2L, 3L))
@@ -194,7 +205,7 @@ class DedupSpec extends AnyFunSuite {
       planStar.take(3000))
   }
 
-  test("nearDupKeep keeps the min doc_id per component and every non-dup doc") {
+  test("keepFromPairs keeps the min doc_id per component and every non-dup doc") {
     import spark.implicits._
     val base = "the quick brown fox jumps over the lazy dog again and again in the park"
     val docs = Seq(
@@ -202,7 +213,7 @@ class DedupSpec extends AnyFunSuite {
       (10L, "completely different words about quantum telescopes and asteroids"),
       (11L, "another unrelated piece of text mentioning markets and budgets")
     ).toDF("doc_id", "text")
-    val kept = Dedup.nearDupKeep(docs, minJaccard = 0.3)
+    val kept = Dedup.keepFromPairs(docs, Dedup.nearDupPairs(docs, minJaccard = 0.3))
       .as[Long].collect().toSet
     // 7 and 3 drop (component min is 2); unrelated docs untouched
     assert(kept == Set(2L, 10L, 11L))

@@ -30,8 +30,6 @@ class HtmlDirSourceSpec extends AnyFunSuite {
 
     val docs = HtmlDirSource.read(spark, root.toString)
     assert(docs.count() == 5) // everything, recursive, no extension filter
-    // opt-in glob filtering still works
-    assert(HtmlDirSource.read(spark, root.toString, glob = "*.html").count() == 3)
     // the extensionless contest-style file extracts like any .html one
     val bare = graft.extract.Extract.run(docs)
       .collect().filter(_.doc_id.endsWith("996215361418929641"))

@@ -216,16 +216,6 @@ class MultimodalSpec extends AnyFunSuite {
     }
   }
 
-  test("resize stub: bounded box, payload shrinks, header carries dims") {
-    import spark.implicits._
-    val resized = Multimodal.resizeStub(Multimodal.mediaTable(docs), 128, 128).collect()
-    resized.foreach { r =>
-      assert(r.width <= 128 && r.height <= 128 && r.width >= 1)
-      val hw = ((r.payload(0) & 0xff) << 8) | (r.payload(1) & 0xff)
-      assert(hw == r.width)
-    }
-  }
-
   test("frame-sample plan fans out via explode, stride respected") {
     import spark.implicits._
     val meta = Multimodal.extractMeta(Multimodal.mediaTable(docs))

@@ -308,7 +308,7 @@ class ResumeSpec extends AnyFunSuite {
     // the recorded key_col turns both into a loud keyed-differently error
     val out = Files.createTempDirectory("ckptkey").toString
     Checkpoint.resume(spark, input, "text", transform, out, buckets = 4)
-    assert(Checkpoint.recordedKeyCols(out) == Set("text"))
+    assert(Checkpoint.recordedKeying(out)._2 == Set("text"))
     val eResume = intercept[IllegalArgumentException] {
       Checkpoint.resume(spark, input, "doc_id", transform, out, buckets = 4)
     }
@@ -326,7 +326,7 @@ class ResumeSpec extends AnyFunSuite {
       val s = Files.readString(p).replaceAll(""","key_col":"[^"]*"""", "")
       Files.writeString(p, s)
     }
-    assert(Checkpoint.recordedKeyCols(out).isEmpty)
+    assert(Checkpoint.recordedKeying(out)._2.isEmpty)
     assert(Checkpoint.validateCommitted(spark, input, "text", out, 4).isEmpty)
     // bucket counts follow the same rule: another count refuses, and
     // manifests that predate bucket-count recording skip the check

@@ -1,5 +1,6 @@
 package graft
 
+import graft.functions.GraftFunctions
 import graft.ops.Similarity
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
@@ -31,6 +32,24 @@ class SimilaritySpec extends AnyFunSuite {
     }
   }
 
+  /** IVF as ann_ivf_topk composes it: build the index, then search it. */
+  private def ivfIndexSearch(corpus: org.apache.spark.sql.DataFrame,
+                             qs: org.apache.spark.sql.DataFrame, k: Int,
+                             nProbe: Int = 2): org.apache.spark.sql.DataFrame = {
+    val (assigned, probes) = Similarity.ivfAssignProbes(spark, corpus, qs, nProbe = nProbe)
+    Similarity.ivfSearch(assigned, probes, k)
+  }
+
+  /** (component, n_members) of the connected components over the
+    * verified cosine pairs: the dup groups emb_cosine_dup's pairs imply.
+    */
+  private def cosineGroups(corpus: org.apache.spark.sql.DataFrame,
+                           minSim: Double): org.apache.spark.sql.DataFrame =
+    graft.ops.Dedup.connectedComponentsAuto(
+        Similarity.cosineDupPairs(spark, corpus, minSim).select(col("id_a"), col("id_b")))
+      .groupBy(col("component"))
+      .agg(count(lit(1)).as("n_members"))
+
   test("brute-force top-k: self is rank 1, k results per query") {
     import spark.implicits._
     val r = Similarity.bruteForceTopK(spark, emb, queries, k = 5).cache()
@@ -57,7 +76,7 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("IVF top-k: self is rank 1 (own centroid always probed)") {
-    assertSelfTop1(Similarity.ivfTopK(spark, emb, queries, k = 5))
+    assertSelfTop1(ivfIndexSearch(emb, queries, k = 5))
   }
 
   /** Planted-dup corpus: 40 well-separated bases; bases 0-9 get 1-3
@@ -102,10 +121,10 @@ class SimilaritySpec extends AnyFunSuite {
     (rows.toSeq.toDF("vec_id", "embedding"), groups.toMap)
   }
 
-  test("cosineDupGroups equals the brute-force threshold transitive closure") {
+  test("cosineDupPairs components equal the brute-force threshold transitive closure") {
     import spark.implicits._
     val (corpus, planted) = plantedDups
-    val got = Similarity.cosineDupGroups(spark, corpus, minSim = 0.999)
+    val got = cosineGroups(corpus, minSim = 0.999)
       .as[(Long, Long)].collect().toMap
     // brute-force closure: all-pairs ≥ minSim → union-find (in-test oracle)
     val vecs = corpus.as[(Long, Array[Float])].collect()
@@ -139,15 +158,15 @@ class SimilaritySpec extends AnyFunSuite {
     val pairs = Similarity.cosineDupPairs(spark, corpus, minSim = 0.999).collect()
     assert(pairs.length == n - 1, s"expected ${n - 1} star pairs, got ${pairs.length}")
     assert(pairs.forall(_.getLong(0) == 0L)) // anchor = min vec_id
-    val groups = Similarity.cosineDupGroups(spark, corpus, minSim = 0.999)
+    val groups = cosineGroups(corpus, minSim = 0.999)
       .as[(Long, Long)].collect()
     assert(groups.toSeq == Seq((0L, n.toLong)))
   }
 
-  test("cosineExprSafe: zero vectors score 0.0, not NaN") {
+  test("cosine_sim: zero vectors score 0.0, not NaN") {
     import spark.implicits._
     val df = Seq((1L, Array(0.0f, 0.0f)), (2L, Array(1.0f, 0.0f))).toDF("vec_id", "embedding")
-    val sims = df.select(Similarity.cosineExprSafe(col("embedding"),
+    val sims = df.select(GraftFunctions.cosine_sim(col("embedding"),
       array(lit(1.0f), lit(1.0f))).as("s")).as[Double].collect()
     assert(sims.forall(!_.isNaN))
     assert(sims.contains(0.0))
@@ -171,7 +190,7 @@ class SimilaritySpec extends AnyFunSuite {
     val pairs = emb.select(col("vec_id"), col("embedding")).unionByName(zero).limit(30)
       .crossJoin(emb.limit(30).select(col("vec_id").as("v2"), col("embedding").as("e2")))
     val both = pairs.select(
-      Similarity.cosineExprSafe(col("embedding"), col("e2")).as("native"),
+      GraftFunctions.cosine_sim(col("embedding"), col("e2")).as("native"),
       oldForm(col("embedding"), col("e2")).as("old"))
       .as[(Double, Double)].collect()
     assert(both.nonEmpty)
@@ -180,7 +199,7 @@ class SimilaritySpec extends AnyFunSuite {
         java.lang.Double.doubleToRawLongBits(o), s"$n vs $o")
     }
     // and the plan is the single native call — no higher-order lambdas left
-    val plan = pairs.select(Similarity.cosineExprSafe(col("embedding"), col("e2")))
+    val plan = pairs.select(GraftFunctions.cosine_sim(col("embedding"), col("e2")))
       .queryExecution.executedPlan.toString
     assert(plan.contains("cosine_sim"), plan.take(1500))
     assert(!plan.contains("zip_with"), plan.take(1500))
@@ -276,7 +295,7 @@ class SimilaritySpec extends AnyFunSuite {
       (1L, Array(1.0f, 2.0f, 3.0f), Array(1.0f, 2.0f)), // mismatch → NULL
       (2L, Array(1.0f, 0.0f), Array(1.0f, 0.0f))        // equal dims → 1.0
     ).toDF("id", "a", "b")
-    val out = df.select(col("id"), Similarity.cosineExprSafe(col("a"), col("b")).as("s"))
+    val out = df.select(col("id"), GraftFunctions.cosine_sim(col("a"), col("b")).as("s"))
       .collect().map(r => r.getLong(0) -> (if (r.isNullAt(1)) None else Some(r.getDouble(1)))).toMap
     assert(out(1L).isEmpty, "mismatched dims must yield NULL")
     assert(math.abs(out(2L).get - 1.0) < 1e-12)
@@ -334,8 +353,8 @@ class SimilaritySpec extends AnyFunSuite {
     }
     val rSingle = curve.last._2
     val rMulti = recall(hits(Similarity.lshMultiProbeTopK(spark, emb01, qs, k = 5, nBits = 8)))
-    val rIvf = recall(hits(Similarity.ivfTopK(spark, emb01, qs, k = 5)))
-    val rIvf4 = recall(hits(Similarity.ivfTopK(spark, emb01, qs, k = 5, nProbe = 4)))
+    val rIvf = recall(hits(ivfIndexSearch(emb01, qs, k = 5)))
+    val rIvf4 = recall(hits(ivfIndexSearch(emb01, qs, k = 5, nProbe = 4)))
     info(curve.map { case (b, r) => f"single@${b}bits=$r%.3f" }.mkString(" ") +
       f" multi@8bits=$rMulti%.3f ivf(nProbe=2/16)=$rIvf%.3f ivf(nProbe=4/16)=$rIvf4%.3f")
     assert(rIvf4 >= rIvf, "more probes cannot lower recall")
@@ -345,30 +364,5 @@ class SimilaritySpec extends AnyFunSuite {
     assert(rMulti > rSingle, s"multi-probe $rMulti must beat single-probe $rSingle")
     assert(rMulti >= 0.25, s"multi-probe recall too low: $rMulti")
     assert(rIvf >= 0.35, s"ivf recall too low: $rIvf")
-  }
-
-  test("zip_with/aggregate cosine expression equals the kernel") {
-    import spark.implicits._
-    val pairs = emb.limit(10).select(col("vec_id"), col("embedding"))
-      .crossJoin(emb.limit(10).select(col("vec_id").as("v2"), col("embedding").as("e2")))
-    val viaExpr = pairs
-      .select(col("vec_id"), col("v2"),
-        Similarity.cosineExpr(col("embedding"), col("e2")).as("sim"))
-      .as[(Long, Long, Double)].collect().map { case (a, b, s) => (a, b) -> s }.toMap
-    val vecs = emb.limit(10).select(col("vec_id").cast("long"), col("embedding"))
-      .as[(Long, Array[Float])].collect()
-    vecs.foreach { case (a, ea) =>
-      vecs.foreach { case (b, eb) =>
-        val kernel = {
-          var dot = 0.0; var na = 0.0; var nb = 0.0
-          ea.indices.foreach { i =>
-            dot += ea(i).toDouble * eb(i); na += ea(i).toDouble * ea(i); nb += eb(i).toDouble * eb(i)
-          }
-          dot / math.sqrt(na * nb)
-        }
-        // zip_with multiplies in float before widening → ~1e-7 drift
-        assert(math.abs(viaExpr((a, b)) - kernel) < 1e-6)
-      }
-    }
   }
 }
